@@ -191,24 +191,31 @@ object Bench {
     }
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     val repLoads = new scala.collection.mutable.ArrayBuffer[Double]
+    // a failed rep is no sample: the wall of a query that threw is the
+    // time to the exception, not the query's cost
     val samples = (1 to reps).flatMap { _ =>
-      val round = ordered.map { case (name, fn) =>
+      val round = ordered.flatMap { case (name, fn) =>
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          Some(name -> (System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          None
         }
-        name -> (System.nanoTime() - t0) / 1e9
       }
       repLoads += loadavg()
       round
     }
     val sentinels = measureSentinels()
     val byName = samples.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-    val results = ordered.map { case (name, _) => name -> median(byName(name)) }
+    // a query that failed every rep is listed apart, out of queries/total
+    val (timed, failedAll) = ordered.map(_._1).partition(byName.contains)
+    val results = timed.map(name => name -> median(byName(name)))
     val qs = results.map { case (k, v) => jstr(k) + ":" + v }
       .mkString("{", ",", "}")
-    val walls = ordered.map { case (name, _) =>
+    val failedJson = failedAll.map(jstr).mkString("[", ",", "]")
+    val walls = timed.map { name =>
       jstr(name) + ":" + byName(name).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val fixturesJson = fixtures.toSeq.sortBy(_._1).map { case (t, (mtime, schema)) =>
@@ -231,8 +238,9 @@ object Bench {
     // window truncated round 16's (contract-conformant) metric line into
     // `parsed: null`, killing the round-over-round table. The contract
     // fields (metric/value/unit/queries/sf) stay on the one line.
+    // a unique default: back-to-back runs must not overwrite each other
     val detailsPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAILS",
-      s"${System.getProperty("java.io.tmpdir")}/graft_bench_details.json")
+      java.nio.file.Files.createTempFile("graft_bench_details", ".json").toString)
     val detailsJson =
       s"""{"rep_walls":$walls,"fixtures":$fixturesJson,"loadavg":$loads}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(detailsPath),
@@ -240,7 +248,7 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] details write failed: ${e.getMessage}")
     }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":${jstr(sfDir)},"reps":$reps,"cpus":$cpusJson,"fixture_prewarm_sec":$prewarmSec,"calibration":$calibration,"sentinels":$sentinelsJson,"loadavg":$loads,"details_file":${jstr(detailsPath)}}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":${jstr(sfDir)},"reps":$reps,"cpus":$cpusJson,"fixture_prewarm_sec":$prewarmSec,"calibration":$calibration,"sentinels":$sentinelsJson,"loadavg":$loads,"details_file":${jstr(detailsPath)}}""")
     spark.stop()
   }
 }

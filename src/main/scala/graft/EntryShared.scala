@@ -383,14 +383,14 @@ private[graft] object EntryShared {
 
   /** Run `body` (start + drain of ONE stream over `src`) with the
     * [[adaptiveStreamWidth]] shuffle width — the r17 state-store-width
-    * fix, reusable for streams that do not go through
-    * [[runStreamToLocal]] (e.g. the Functions pipelines, whose
+    * fix. [[runStreamToLocal]] runs inside it, and so do streams that
+    * do not go through that helper (e.g. the Functions pipelines, whose
     * watermark dedup otherwise commits session-width state partitions
-    * per batch). Same single-threaded-harness assumption as
-    * [[runStreamToLocal]]: the session conf is mutated for the body's
-    * duration, so queries planned CONCURRENTLY on this session would
-    * inherit the narrow width (the entry points run one query at a
-    * time; set the width on a cloned session if that ever changes). */
+    * per batch). Single-threaded-harness assumption: the session conf
+    * is mutated for the body's duration, so queries planned
+    * CONCURRENTLY on this session would inherit the narrow width (the
+    * entry points run one query at a time; set the width on a cloned
+    * session if that ever changes). */
   private[graft] def withStreamWidth[T](s: SparkSession, src: DataFrame)
                                        (body: => T): T = {
     val width = adaptiveStreamWidth(s, src)
@@ -403,37 +403,31 @@ private[graft] object EntryShared {
   }
 
   private[graft] def runStreamToLocal(s: SparkSession, agg: DataFrame,
-                               mode: String = "complete"): DataFrame = {
-    val width = adaptiveStreamWidth(s, agg)
-    val prev = width.map(_ => s.conf.get("spark.sql.shuffle.partitions"))
-    width.foreach(w => s.conf.set("spark.sql.shuffle.partitions", w.toString))
-    try {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-ckpt")
-    val out = if (mode == "append") {
-      val outDir = java.nio.file.Files.createTempDirectory("graft-stream-out")
-      streamOutRoots.add(outDir)
-      val q = agg.writeStream.outputMode(mode).format("parquet")
-        .option("path", outDir.toString)
-        .option("checkpointLocation", ckpt.toString).start()
-      drainGuarded(s, q)
-      s.read.schema(agg.schema).parquet(outDir.toString)
-    } else {
-      val viewName = "graft_stream_" + java.lang.Long.toHexString(System.nanoTime())
-      val q = agg.writeStream.outputMode(mode).format("memory")
-        .queryName(viewName).option("checkpointLocation", ckpt.toString).start()
-      drainGuarded(s, q)
-      val t = s.table(viewName)
-      val local = s.createDataFrame(
-        java.util.Arrays.asList(t.collect(): _*), t.schema)
-      s.catalog.dropTempView(viewName): Unit
-      local
+                               mode: String = "complete"): DataFrame =
+    withStreamWidth(s, agg) {
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-ckpt")
+      val out = if (mode == "append") {
+        val outDir = java.nio.file.Files.createTempDirectory("graft-stream-out")
+        streamOutRoots.add(outDir)
+        val q = agg.writeStream.outputMode(mode).format("parquet")
+          .option("path", outDir.toString)
+          .option("checkpointLocation", ckpt.toString).start()
+        drainGuarded(s, q)
+        s.read.schema(agg.schema).parquet(outDir.toString)
+      } else {
+        val viewName = "graft_stream_" + java.lang.Long.toHexString(System.nanoTime())
+        val q = agg.writeStream.outputMode(mode).format("memory")
+          .queryName(viewName).option("checkpointLocation", ckpt.toString).start()
+        drainGuarded(s, q)
+        val t = s.table(viewName)
+        val local = s.createDataFrame(
+          java.util.Arrays.asList(t.collect(): _*), t.schema)
+        s.catalog.dropTempView(viewName): Unit
+        local
+      }
+      deleteTree(ckpt)
+      out
     }
-    deleteTree(ckpt)
-    out
-    } finally {
-      prev.foreach(p => s.conf.set("spark.sql.shuffle.partitions", p))
-    }
-  }
 
   /** Recursive delete (files then dirs, best-effort) — the ONE temp-tree
     * cleanup used by the stream-slice writer, the fixture cache, and

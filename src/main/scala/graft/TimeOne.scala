@@ -36,7 +36,7 @@ object TimeOne {
             taskMs.addAndGet(e.taskMetrics.executorRunTime): Unit
         override def onStageCompleted(
             e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          if (stageDbg) {
+          if (stageDbg && e.stageInfo.taskMetrics != null) {
             val run = e.stageInfo.taskMetrics.executorRunTime
             if (run > 200)
               println(f"[stage] id=${e.stageInfo.stageId}%5d run=${run / 1000.0}%7.2fs " +

@@ -1,6 +1,5 @@
 package graft.ext
 
-import graft.log.PathIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -52,8 +51,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * explicit `epoch=<id>` directory (replay rewrites itself), candidate
  * reads filter `epoch < current` plus the batch's own hash/band/id
  * buckets (plan-gated), and scheduled folds ride the crash-safe
- * [[NearDupStream.compactIndex]] swap on all THREE index levels. All
- * index bookkeeping rides [[graft.log.PathIO]] (Hadoop FileSystem).
+ * [[IndexIO.compact]] swap on all THREE index levels ([[IndexedEpoch]]).
+ * All index bookkeeping rides [[graft.log.PathIO]] (Hadoop FileSystem).
  */
 object CleanCorpusStream {
 
@@ -72,10 +71,6 @@ object CleanCorpusStream {
         xxhash64(col(textCol)).as("xh"))
       .withColumn("hb", pmod(col("xh"), lit(hashBuckets.toLong)))
 
-  private def readIndexOrEmpty(spark: SparkSession, path: String,
-                               like: DataFrame): DataFrame =
-    IndexIO.read(spark, path, like)
-
   /** Exact-duplicate DROP verdicts for one batch against the persisted
     * hash index: read pruned to `epoch < epoch` AND the batch's hb
     * buckets (both partition columns — exposed for the plan gate),
@@ -85,7 +80,7 @@ object CleanCorpusStream {
     // bounded collect: ≤ hashBuckets values by construction
     val hbs = batchH.select("hb").distinct()
       .collect().map(_.getLong(0)).toSeq
-    val idx = readIndexOrEmpty(spark, hashesDir, batchH)
+    val idx = IndexIO.read(spark, hashesDir, batchH)
       .filter(col("epoch") < epoch &&
         (if (hbs.isEmpty) lit(false) else col("hb").isin(hbs: _*)))
     idx.select(col("h"))
@@ -113,138 +108,53 @@ object CleanCorpusStream {
           compactEvery: Option[Int] = None): StreamingQuery = {
     require(bands >= 1 && numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes)")
-    require(compactEvery.forall(_ >= 2), "compactEvery must be >= 2")
     val hashesDir = s"$indexDir/hashes"
-    val bandsDir = s"$indexDir/bands"
-    val shDir = s"$indexDir/shingles"
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val spark = batch.sparkSession
-        BatchTune.adapt(batch, indexBytes = IndexIO.committedBytes(hashesDir) +
-          IndexIO.committedBytes(bandsDir) + IndexIO.committedBytes(shDir))
-        val dbg = sys.env.contains("SPARK_GRAFT_ND_DEBUG")
-        var tPrev = System.nanoTime()
-        def mark(st: String): Unit = if (dbg) {
-          val t = System.nanoTime()
-          println(f"[cc-debug] epoch=$epochId $st%-14s ${(t - tPrev) / 1e9}%6.2fs")
-          tPrev = t
-        }
-        Seq(hashesDir, bandsDir, shDir).foreach(NearDupStream.resumeCompaction)
-        // the three levels fold independently (distinct dirs, own
-        // pointer commits) and CONCURRENTLY with the whole batch body
-        // (guide §2.6; gcNow=false defers subsumed-dir deletes to the
-        // next batch's resume — the NearDupStream overlap rationale);
-        // awaited in the batch's finally
-        val pendingFold = compactEvery.collect {
-          case n if epochId > 0 && epochId % n == 0 =>
-            NearDupStream.startJobs(spark,
-              () => NearDupStream.compactIndex(spark, hashesDir, "hb",
-                epochId - 1, gcNow = false),
-              () => NearDupStream.compactIndex(spark, bandsDir, "bp",
-                epochId - 1, gcNow = false),
-              () => NearDupStream.compactIndex(spark, shDir, "sb",
-                epochId - 1, gcNow = false))
-        }
-        mark("compaction")
-        // 1. QUALITY — stateless; casualties vanish here (never indexed).
-        // Only the two signals the rule consumes are computed, with
-        // TextOps.withQualityScore's exact formulas — the full scorer
-        // also runs stopword/digit/punct regex passes over every byte
-        // of text that this filter would just discard.
-        val toks = TextOps.tokens(col(textCol))
-        val nTok = size(toks)
-        val meanWordLen =
-          (length(col(textCol)) - (nTok - 1)).cast("double") / nTok
-        val quality = batch
-          .filter(nTok >= minTokens &&
-            meanWordLen.between(minWordLen, maxWordLen))
-          .persist()
-        try {
-          // 2. EXACT — vs the hash index, then within-batch first-wins
-          val bh = hashed(quality, idCol, textCol, hashBuckets).persist()
-          try {
-            val idxExact = indexExactDropped(spark, hashesDir, bh, epochId)
-            val batchRank = Window.partitionBy("h").orderBy(col("doc_id"))
-            val selfExact = bh
-              .withColumn("_rn", row_number().over(batchRank))
-              .filter(col("_rn") > 1)
-              .select(col("doc_id").as("dropped_id")).distinct()
-            val exactDropped = idxExact.unionByName(selfExact).distinct()
-            mark("exact-plan")
-            val exactKept = quality
-              .join(exactDropped, col(idCol) === col("dropped_id"), "left_anti")
-              .persist()
-            try {
-              // 3. NEAR-DUP over exact survivors — the NearDupStream body
-              // (quality guarantees n_tokens ≥ minTokens ≥ shingleN, so
-              // the short-doc bypass never triggers here)
-              val bb = NearDupStream.bandedSigs(exactKept, idCol, textCol,
-                shingleN, numHashes, bands, bandBuckets).persist()
-              val sh = NearDupStream.shingleSets(exactKept, idCol, textCol,
-                shingleN, idBuckets).persist()
-              var candPin: Option[DataFrame] = None
-              try {
-                val candIdx = NearDupStream.indexCandidates(spark, bandsDir,
-                  bb, epochId).persist()
-                candPin = Some(candIdx)
-                val sbs = candIdx.select(pmod(col("id_a"), lit(idBuckets.toLong)))
-                  .distinct().collect().map(_.getLong(0)).toSeq
-                val idxSh = readIndexOrEmpty(spark, shDir, sh)
-                  .filter(col("epoch") < epochId &&
-                    (if (sbs.isEmpty) lit(false) else col("sb").isin(sbs: _*)))
-                  .select(col("doc_id").as("id"), col("sh"))
-                val shBatch = sh.select(col("doc_id").as("id"), col("sh"))
-                val a = bb.toDF("id_a", "band_hash", "bp")
-                val b = bb.toDF("id_b", "band_hash", "bp")
-                val candSelf = a.join(b.hint("shuffle_hash"), Seq("band_hash"))
-                  .filter(col("id_a") < col("id_b"))
-                  .select("id_a", "id_b").distinct()
-                mark("nd-plan")
-                val nearDropped = TextOps.verifyExactJaccard(
-                    candIdx.unionByName(candSelf),
-                    idxSh.unionByName(shBatch), threshold)
-                  .select(col("id_b").as("dropped_id")).distinct()
-
-                def epochWrite(df: DataFrame, bucket: Option[String],
-                               path: String): Unit = {
-                  val w = df.write.mode("overwrite")
-                  bucket.fold(w)(bk => w.partitionBy(bk))
-                    .parquet(s"$path/epoch=$epochId")
-                }
-                // FOUR independent writes (clean output; hashes = exact
-                // keepers only, identity is transitive; bands/shingles =
-                // ALL exact survivors — near-dup all-seen; one file per
-                // touched bucket) run as CONCURRENT Spark jobs: each is
-                // dominated by per-file fixed cost and they target
-                // distinct epoch dirs off persisted inputs — sequential
-                // writes stacked four floors per batch (measured ~4 s of
-                // the ~6 s batch wall). Replay overwrites each dir.
-                NearDupStream.parallelWrites(spark,
-                  () => epochWrite(exactKept
-                    .join(nearDropped, col(idCol) === col("dropped_id"),
-                      "left_anti"), None, outDir),
-                  () => epochWrite(bh
-                    .join(exactDropped, col("doc_id") === col("dropped_id"),
-                      "left_anti")
-                    .repartition(col("hb")), Some("hb"), hashesDir),
-                  () => epochWrite(bb.repartition(col("bp")), Some("bp"),
-                    bandsDir),
-                  () => epochWrite(sh.repartition(col("sb")), Some("sb"),
-                    shDir))
-                mark("writes(par)")
-              } finally {
-                bb.unpersist(); sh.unpersist()
-                candPin.foreach(_.unpersist()); ()
-              }
-            } finally { exactKept.unpersist(); () }
-          } finally { bh.unpersist(); () }
-        } finally {
-          quality.unpersist()
-          pendingFold.foreach(_.await())
-          mark("fold-await")
-        }
-      }
-      .start()
+    IndexedEpoch.start(docs, checkpointDir, "cc",
+        (hashesDir -> "hb") +: NearDupStream.levels(indexDir),
+        compactEvery) { (e, batch) =>
+      // 1. QUALITY — stateless; casualties vanish here (never indexed).
+      // Only the two signals the rule consumes are computed, with
+      // TextOps.withQualityScore's exact formulas — the full scorer
+      // also runs stopword/digit/punct regex passes over every byte
+      // of text that this filter would just discard.
+      val toks = TextOps.tokens(col(textCol))
+      val nTok = size(toks)
+      val meanWordLen =
+        (length(col(textCol)) - (nTok - 1)).cast("double") / nTok
+      val quality = e.pin(batch
+        .filter(nTok >= minTokens &&
+          meanWordLen.between(minWordLen, maxWordLen)))
+      // 2. EXACT — vs the hash index, then within-batch first-wins
+      val bh = e.pin(hashed(quality, idCol, textCol, hashBuckets))
+      val idxExact = indexExactDropped(e.spark, hashesDir, bh, e.id)
+      val batchRank = Window.partitionBy("h").orderBy(col("doc_id"))
+      val selfExact = bh
+        .withColumn("_rn", row_number().over(batchRank))
+        .filter(col("_rn") > 1)
+        .select(col("doc_id").as("dropped_id")).distinct()
+      val exactDropped = idxExact.unionByName(selfExact).distinct()
+      e.mark("exact-plan")
+      val exactKept = e.pin(quality
+        .join(exactDropped, col(idCol) === col("dropped_id"), "left_anti"))
+      // 3. NEAR-DUP over exact survivors — the NearDupStream stage
+      // (quality guarantees n_tokens ≥ minTokens ≥ shingleN, so the
+      // short-doc bypass never triggers here)
+      val (nearDropped, nearWrites) = NearDupStream.nearDupStage(e,
+        exactKept, indexDir, threshold, idCol, textCol, shingleN, numHashes,
+        bands, bandBuckets, idBuckets)
+      // FOUR independent writes (clean output; hashes = exact keepers
+      // only, identity is transitive; bands/shingles = ALL exact
+      // survivors — near-dup all-seen) run as CONCURRENT Spark jobs:
+      // sequential writes stacked four per-file floors per batch
+      // (measured ~4 s of the ~6 s batch wall)
+      IndexedEpoch.parallelWrites(e.spark, Seq(
+        () => e.write(exactKept
+          .join(nearDropped, col(idCol) === col("dropped_id"), "left_anti"),
+          None, outDir),
+        () => e.write(bh
+          .join(exactDropped, col("doc_id") === col("dropped_id"), "left_anti")
+          .repartition(col("hb")), Some("hb"), hashesDir)) ++ nearWrites: _*)
+      e.mark("writes(par)")
+    }
   }
 }

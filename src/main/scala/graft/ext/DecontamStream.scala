@@ -38,7 +38,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * (eval still the build side) instead of forcing a broadcast the
  * driver can't hold. The (epoch, eb) partitioning exists to bound
  * per-epoch file counts and to reuse
- * [[NearDupStream.compactIndex]]/[[NearDupStream.rebucket]]
+ * [[IndexIO.compact]]/[[NearDupStream.rebucket]]
  * verbatim — not for read pruning, which a broadcast-small side does
  * not need. The index stores DISTINCT shingle hashes only (8 bytes
  * each, no eval ids): existence is what contamination needs, and
@@ -47,7 +47,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * Exactly-once: kept output and index writes target explicit
  * `epoch=<id>` dirs with plain overwrite; reads filter
  * `epoch < current` (a replayed batch re-derives its own eval
- * postings from the batch itself) — the [[NearDupStream]] protocol.
+ * postings from the batch itself) — the [[IndexedEpoch]] protocol.
  */
 object DecontamStream {
 
@@ -62,10 +62,6 @@ object DecontamStream {
         col(textCol), n, distinct = true)).as("shingle_h"))
       .distinct()
       .withColumn("eb", pmod(col("shingle_h"), lit(evalBuckets.toLong)))
-
-  private def readIndexOrEmpty(spark: SparkSession, path: String,
-                               like: DataFrame): DataFrame =
-    IndexIO.read(spark, path, like)
 
   /** Default [[run]] `evalBroadcastCap`: 10M distinct 8-byte shingle
     * hashes ≈ 80 MB raw, a few hundred MB as a broadcast hash relation —
@@ -85,7 +81,7 @@ object DecontamStream {
                                      epoch: Long, n: Int, minShared: Long,
                                      idCol: String, textCol: String,
                                      broadcastOk: Boolean = true): DataFrame = {
-    val idx = readIndexOrEmpty(spark, ngramsDir, newEval)
+    val idx = IndexIO.read(spark, ngramsDir, newEval)
       .filter(col("epoch") < epoch).select("shingle_h")
     val evalAll = idx.unionByName(newEval.select("shingle_h")).distinct()
     val evalSide = if (broadcastOk) broadcast(evalAll)
@@ -106,7 +102,7 @@ object DecontamStream {
     * so no separate emptiness job runs per batch. */
   private def evalCounts(spark: SparkSession, ngramsDir: String,
                          newEval: DataFrame, epoch: Long): (Long, Long) = {
-    val idxCount = readIndexOrEmpty(spark, ngramsDir, newEval)
+    val idxCount = IndexIO.read(spark, ngramsDir, newEval)
       .filter(col("epoch") < epoch).count()
     (idxCount, newEval.count())
   }
@@ -167,7 +163,7 @@ object DecontamStream {
         .map(_.stripPrefix("epoch=").toLong).sorted
     if (epochs.isEmpty) return Seq.empty[(Long, Long)].toDF("doc_id", "epoch")
     val like = Seq.empty[(Long, Long)].toDF("shingle_h", "eb")
-    val idx = readIndexOrEmpty(spark, ngramsDir, like).select("shingle_h")
+    val idx = IndexIO.read(spark, ngramsDir, like).select("shingle_h")
     val broadcastOk = idx.count() <= evalBroadcastCap
     val evalSide = {
       val distinctIdx = idx.distinct()
@@ -198,7 +194,7 @@ object DecontamStream {
       // tagged, every write awaited) as the other streaming indexes.
       val idsByEpoch = tombRows.groupBy(_._2)
       val hit = idsByEpoch.keys.toSeq.sorted
-      NearDupStream.parallelWrites(spark, hit.map { e => () =>
+      IndexedEpoch.parallelWrites(spark, hit.map { e => () =>
         rewriteEpoch(spark, outDir, e,
           idsByEpoch(e).map(_._1), idCol)
       }: _*)
@@ -309,64 +305,33 @@ object DecontamStream {
           evalBuckets: Int = EvalBuckets,
           compactEvery: Option[Int] = None,
           evalBroadcastCap: Long = DefaultEvalBroadcastCap): StreamingQuery = {
-    require(compactEvery.forall(_ >= 2), "compactEvery must be >= 2")
     require(evalBroadcastCap >= 1, "evalBroadcastCap must be >= 1")
     val ngramsDir = s"$indexDir/ngrams"
-    mixed.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val spark = batch.sparkSession
-        BatchTune.adapt(batch, indexBytes = IndexIO.committedBytes(ngramsDir))
-        NearDupStream.resumeCompaction(ngramsDir)
-        // fold CONCURRENTLY with the batch body (guide §2.6; gcNow=false
-        // defers subsumed-dir deletes to the next batch's resume — the
-        // NearDupStream overlap rationale); awaited in the finally
-        val pendingFold = compactEvery.collect {
-          case cn if epochId > 0 && epochId % cn == 0 =>
-            NearDupStream.startJobs(spark,
-              () => NearDupStream.compactIndex(spark, ngramsDir, "eb",
-                epochId - 1, gcNow = false))
-        }
-        val cached = batch.persist()
-        try {
-          val corpusB = cached.filter(!col(evalFlagCol))
-            .drop(evalFlagCol)
-          val newEval = evalPostings(cached.filter(col(evalFlagCol)),
-            textCol, n, evalBuckets).persist()
-          try {
-            // one pre-pass over the eval side: broadcast-guard counts
-            // AND the has-eval decision (no separate emptiness job)
-            val (idxCount, newCount) =
-              evalCounts(spark, ngramsDir, newEval, epochId)
-            val dropped = contaminatedIds(spark, ngramsDir, corpusB,
-              newEval, epochId, n, minShared, idCol, textCol,
-              broadcastOk = idxCount + newCount <= evalBroadcastCap)
-            def epochWrite(df: DataFrame, bucket: Option[String],
-                           path: String): Unit = {
-              val w = df.write.mode("overwrite")
-              bucket.fold(w)(bk => w.partitionBy(bk))
-                .parquet(s"$path/epoch=$epochId")
-            }
-            // eval-less batches (the common case — eval updates are
-            // rare) skip the index write entirely: an epoch dir holding
-            // only _SUCCESS would poison the index read's schema
-            // inference once every dir is empty, and writing nothing is
-            // replay-identical (the replayed batch re-derives the same
-            // empty posting set)
-            NearDupStream.parallelWrites(spark,
-              (Seq(() => epochWrite(corpusB
-                .join(dropped, col(idCol) === col("dropped_id"), "left_anti"),
-                None, outDir)) ++
-                (if (newCount > 0)
-                  Seq(() => epochWrite(newEval.repartition(col("eb")),
-                    Some("eb"), ngramsDir))
-                else Seq.empty)): _*)
-          } finally { newEval.unpersist(); () }
-        } finally {
-          cached.unpersist()
-          pendingFold.foreach(_.await()); ()
-        }
-      }
-      .start()
+    IndexedEpoch.start(mixed, checkpointDir, "dc", Seq(ngramsDir -> "eb"),
+        compactEvery) { (e, batch) =>
+      val cached = e.pin(batch)
+      val corpusB = cached.filter(!col(evalFlagCol)).drop(evalFlagCol)
+      val newEval = e.pin(evalPostings(cached.filter(col(evalFlagCol)),
+        textCol, n, evalBuckets))
+      // one pre-pass over the eval side: broadcast-guard counts AND the
+      // has-eval decision (no separate emptiness job)
+      val (idxCount, newCount) = evalCounts(e.spark, ngramsDir, newEval, e.id)
+      val dropped = contaminatedIds(e.spark, ngramsDir, corpusB, newEval,
+        e.id, n, minShared, idCol, textCol,
+        broadcastOk = idxCount + newCount <= evalBroadcastCap)
+      // eval-less batches (the common case — eval updates are rare) skip
+      // the index write entirely: an epoch dir holding only _SUCCESS
+      // would poison the index read's schema inference once every dir is
+      // empty, and writing nothing is replay-identical (the replayed
+      // batch re-derives the same empty posting set)
+      IndexedEpoch.parallelWrites(e.spark,
+        (Seq(() => e.write(corpusB
+          .join(dropped, col(idCol) === col("dropped_id"), "left_anti"),
+          None, outDir)) ++
+          (if (newCount > 0)
+            Seq(() => e.write(newEval.repartition(col("eb")), Some("eb"),
+              ngramsDir))
+          else Seq.empty)): _*)
+    }
   }
 }

@@ -107,19 +107,6 @@ object NearDupStream {
           .as("sh"))
       .withColumn("sb", pmod(col("doc_id"), lit(idBuckets.toLong)))
 
-  // All index-directory bookkeeping rides graft.log.PathIO (the Hadoop
-  // FileSystem seam): existence probes, epoch listings, and the
-  // compaction swap resolve through the path's OWN scheme, so a
-  // persisted index on hdfs:// is seen — the previous java.nio probes
-  // returned false for any non-local URI, silently treating the index
-  // as empty every batch (all cross-batch duplicates kept, no error).
-  import graft.log.PathIO
-  private type HPath = org.apache.hadoop.fs.Path
-
-  private def readIndexOrEmpty(spark: SparkSession, path: String,
-                               like: DataFrame): DataFrame =
-    IndexIO.read(spark, path, like)
-
   /** Candidate (id_a = indexed earlier doc, id_b = batch doc) pairs for
     * one batch against the persisted bands index: the read is pruned to
     * `epoch < epoch` AND the batch's own bp buckets (both partition
@@ -131,7 +118,7 @@ object NearDupStream {
     // bounded collect: ≤ BandBuckets values by construction
     val bps = batchBands.select("bp").distinct()
       .collect().map(_.getLong(0)).toSeq
-    val idx = readIndexOrEmpty(spark, bandsDir, batchBands)
+    val idx = IndexIO.read(spark, bandsDir, batchBands)
       .filter(col("epoch") < epoch &&
         (if (bps.isEmpty) lit(false) else col("bp").isin(bps: _*)))
     // SHUFFLE_HASH: per-bucket pair work is quadratic in matches —
@@ -141,34 +128,6 @@ object NearDupStream {
         .hint("shuffle_hash"), Seq("band_hash"))
       .select("id_a", "id_b").distinct()
   }
-
-  /**
-   * Fold every committed index entry ≤ `upToEpoch` of one level into a
-   * single consolidated fold — the metadata bound for a long-running
-   * stream (without it the index accrues one directory per batch
-   * FOREVER, and every batch's partition discovery lists them all;
-   * the TopicLog manifest-prune analog for this operator).
-   *
-   * Safety: called from inside the batch for `upToEpoch = current − 1`,
-   * every folded epoch has a committed checkpoint entry (the file
-   * source replays at most the last uncommitted batch), so no replay
-   * can ever target a folded epoch, and the fold keeps the MAX folded
-   * id — the `epoch < current` read filter sees exactly the same data
-   * before and after. Single-writer by construction (foreachBatch is
-   * sequential). Commit protocol: [[IndexIO]] pointer indirection —
-   * immutable fold dirs activated by one atomicCreate'd pointer, no
-   * directory rename, so the swap is crash-safe on object stores too.
-   */
-  private[graft] def compactIndex(spark: SparkSession, levelDir: String,
-                                  bucketCol: String, upToEpoch: Long,
-                                  gcNow: Boolean = true): Unit =
-    IndexIO.compact(spark, levelDir, bucketCol, upToEpoch, gcNow)
-
-  /** Heal + garbage-collect one level ([[IndexIO.resume]]): finish the
-    * cleanup of a committed fold, discard uncommitted fold data. Runs
-    * at every batch start and at [[rebucket]] entry. */
-  private[graft] def resumeCompaction(levelDir: String): Unit =
-    IndexIO.resume(levelDir)
 
   /**
    * Bucket-fanout migration of one index level (the re-bucketing admin
@@ -187,7 +146,7 @@ object NearDupStream {
    * OFFLINE op: run with the stream STOPPED (single-writer, like the
    * resize it implements). Crash-safe via the [[IndexIO]] pointer
    * commit — a crash before the pointer leaves the sources intact
-   * (the fold data is unreferenced garbage [[resumeCompaction]]
+   * (the fold data is unreferenced garbage [[IndexIO.resume]]
    * sweeps), a crash after it is finished by the same resume, which
    * BOTH a retried rebucket and the next stream batch run first.
    * After the swap, restart the stream passing the NEW fanout — the
@@ -197,67 +156,63 @@ object NearDupStream {
                srcCol: String, newBuckets: Int): Unit =
     IndexIO.rebucket(spark, levelDir, bucketCol, srcCol, newBuckets)
 
-  /** Run independent per-epoch writes as concurrent Spark jobs (they
-    * target distinct directories and read only persisted inputs).
-    * EVERY write is awaited before this returns — success or failure —
-    * so no epoch-dir write can outlive the batch that issued it: the
-    * previous fail-fast version left sibling jobs running, and a
-    * replayed batch's mode("overwrite") could race a zombie write to
-    * the same epoch dir. The writes are additionally tagged with a
-    * per-call job group so an INTERRUPTED await (query.stop mid-batch)
-    * cancels the in-flight jobs instead of orphaning them. Shared by
-    * [[NearDupStream]], [[SemanticDedupStream]] and
-    * [[CleanCorpusStream]]. */
-  private[ext] def parallelWrites(spark: SparkSession,
-                                  writes: (() => Unit)*): Unit =
-    startJobs(spark, writes: _*).await()
+  /** The two index levels under `indexDir`, as (dir, bucket column). */
+  private[ext] def levels(indexDir: String): Seq[(String, String)] =
+    Seq(s"$indexDir/bands" -> "bp", s"$indexDir/shingles" -> "sb")
 
-  /** Handle to a group of in-flight [[startJobs]] jobs: [[await]] blocks
-    * until every one finishes and rethrows the first failure. MUST be
-    * awaited before the launching batch returns — an un-awaited job
-    * could outlive the batch and race a replayed batch's overwrite. */
-  private[ext] final class PendingJobs(
-      sc: org.apache.spark.SparkContext, group: String,
-      futures: Seq[scala.concurrent.Future[Unit]]) {
-    import scala.concurrent.Await
-    import scala.concurrent.duration.Duration
-    import scala.util.{Failure, Try}
-    def await(): Unit = {
-      val outcomes =
-        try futures.map(f => Try(Await.result(f, Duration.Inf)))
-        catch {
-          case t: Throwable => // interrupted await: kill the in-flight jobs
-            sc.cancelJobGroup(group)
-            futures.foreach(f =>
-              Try(Await.result(f, Duration(60, "s"))): Unit)
-            throw t
-        }
-      outcomes.collectFirst { case Failure(e) =>
-        sc.cancelJobGroup(group) // defensive: all futures already completed
-        throw e
-      }: Unit
-    }
-  }
-
-  /** Launch independent jobs as concurrent Spark jobs (guide §2.6 —
-    * overlap independent work so one job's stragglers back-fill with the
-    * next job's tasks), tagged with a per-call job group so an
-    * interrupted await cancels them. Callers must [[PendingJobs.await]]
-    * within the same batch. */
-  private[ext] def startJobs(spark: SparkSession,
-                             works: (() => Unit)*): PendingJobs = {
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val sc = spark.sparkContext
-    val group = s"graft-epoch-writes-${java.util.UUID.randomUUID}"
-    val futures = works.map { w =>
-      Future {
-        sc.setJobGroup(group, "graft parallel epoch writes",
-          interruptOnCancel = true)
-        try w() finally sc.clearJobGroup()
-      }
-    }
-    new PendingJobs(sc, group, futures)
+  /** The near-dup stage of one epoch, shared by [[run]] and
+    * [[CleanCorpusStream]]: MinHash-LSH candidates of `docs` against the
+    * persisted bands index (bp- and epoch-pruned) and within the batch,
+    * then ONE exact shingle-Jaccard verify. Returns the dropped ids
+    * (column `dropped_id`) and the two index writes — ALL of `docs`,
+    * kept or dropped (all-seen). */
+  private[ext] def nearDupStage(e: IndexedEpoch.Epoch, docs: DataFrame,
+                                indexDir: String, threshold: Double,
+                                idCol: String, textCol: String,
+                                shingleN: Int, numHashes: Int, bands: Int,
+                                bandBuckets: Int, idBuckets: Int)
+      : (DataFrame, Seq[() => Unit]) = {
+    val Seq((bandsDir, _), (shDir, _)) = levels(indexDir)
+    val bb = e.pin(bandedSigs(docs, idCol, textCol, shingleN, numHashes,
+      bands, bandBuckets))
+    val sh = e.pin(shingleSets(docs, idCol, textCol, shingleN, idBuckets))
+    // 1. candidates vs the persisted index (bp- and epoch-pruned);
+    // pinned: the sb-collect below and the verify join both consume it —
+    // without the pin the pruned index read + band join would run twice
+    val candIdx = e.pin(indexCandidates(e.spark, bandsDir, bb, e.id))
+    e.mark("bands+cands")
+    // fetch earlier docs' shingles — pruned to candidate id buckets
+    val sbs = candIdx.select(pmod(col("id_a"), lit(idBuckets.toLong)))
+      .distinct().collect().map(_.getLong(0)).toSeq
+    e.mark("sbs-collect")
+    val idxSh = IndexIO.read(e.spark, shDir, sh)
+      .filter(col("epoch") < e.id &&
+        (if (sbs.isEmpty) lit(false) else col("sb").isin(sbs: _*)))
+      .select(col("doc_id").as("id"), col("sh"))
+    val shBatch = sh.select(col("doc_id").as("id"), col("sh"))
+    // 2. candidates within the batch (arrival tie-break: id order)
+    val a = bb.toDF("id_a", "band_hash", "bp")
+    val b = bb.toDF("id_b", "band_hash", "bp")
+    val candSelf = a.join(b.hint("shuffle_hash"), Seq("band_hash"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
+    // ONE verify serves both candidate sources — the pair schema is
+    // shared and one lookup table covers every id: index-pair id_a's
+    // come from idxSh, self-pair ids and every id_b from shBatch; ids
+    // are unique across the union (the epoch < current filter excludes
+    // a replayed batch's own index entries, and a doc is indexed in
+    // exactly one epoch)
+    val dropped = TextOps.verifyExactJaccard(
+        candIdx.unionByName(candSelf),
+        idxSh.unionByName(shBatch), threshold)
+      .select(col("id_b").as("dropped_id")).distinct()
+    e.mark("plan-dropped")
+    // repartition on the bucket key BEFORE partitionBy (the delayed_due
+    // one-file-per-bucket idiom) — without it every task writes a sliver
+    // into every bucket dir, whose footer reads every LATER batch then pays
+    (dropped, Seq(
+      () => e.write(bb.repartition(col("bp")), Some("bp"), bandsDir),
+      () => e.write(sh.repartition(col("sb")), Some("sb"), shDir)))
   }
 
   /**
@@ -266,9 +221,9 @@ object NearDupStream {
    * under `indexDir` across batches and restarts; `checkpointDir` is
    * the Structured Streaming checkpoint. `compactEvery = Some(n)`
    * folds all index epochs below the current batch into one directory
-   * every n batches ([[compactIndex]] — bounds index metadata for
-   * long-running streams). Returns the running query — callers drain
-   * with `processAllAvailable`.
+   * every n batches ([[IndexIO.compact]] via [[IndexedEpoch]] — bounds
+   * index metadata for long-running streams). Returns the running
+   * query — callers drain with `processAllAvailable`.
    */
   def run(docs: DataFrame, indexDir: String, outDir: String,
           checkpointDir: String, threshold: Double = 0.8,
@@ -279,135 +234,22 @@ object NearDupStream {
           compactEvery: Option[Int] = None): StreamingQuery = {
     require(bands >= 1 && numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes)")
-    require(compactEvery.forall(_ >= 2), "compactEvery must be >= 2")
-    val bandsDir = s"$indexDir/bands"
-    val shDir = s"$indexDir/shingles"
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val spark = batch.sparkSession
-        BatchTune.adapt(batch, indexBytes =
-          IndexIO.committedBytes(bandsDir) + IndexIO.committedBytes(shDir))
-        val dbg = sys.env.contains("SPARK_GRAFT_ND_DEBUG")
-        var tPrev = System.nanoTime()
-        def mark(s: String): Unit = if (dbg) {
-          val t = System.nanoTime()
-          println(f"[nd-debug] epoch=$epochId $s%-14s ${(t - tPrev) / 1e9}%6.2fs")
-          tPrev = t
-        }
-        // finish (or discard) any crash-interrupted compaction BEFORE
-        // reading the index; then fold on schedule — every folded epoch
-        // is committed (this batch is the only possibly-uncommitted one)
-        resumeCompaction(bandsDir); resumeCompaction(shDir)
-        // Folds run CONCURRENTLY with the whole batch body (guide §2.6):
-        // gcNow=false defers the subsumed-dir deletes to the next batch's
-        // resumeCompaction, so the batch's own index reads — planned
-        // against either the pre- or post-fold view, both content-
-        // identical — never lose files mid-job. Awaited in the batch's
-        // finally, so no fold outlives the batch that scheduled it.
-        val pendingFold = compactEvery.collect {
-          case n if epochId > 0 && epochId % n == 0 =>
-            startJobs(spark,
-              () => compactIndex(spark, bandsDir, "bp", epochId - 1,
-                gcNow = false),
-              () => compactIndex(spark, shDir, "sb", epochId - 1,
-                gcNow = false))
-        }
-        mark("compaction")
-        val cached = batch.persist()
-        try {
-          // sub-shingle-width docs: never near-dups, never indexed
-          val eligible = cached.filter(
-            size(split(col(textCol), " ")) >= shingleN)
-          val bb = bandedSigs(eligible, idCol, textCol, shingleN,
-            numHashes, bands, bandBuckets).persist()
-          val sh = shingleSets(eligible, idCol, textCol, shingleN, idBuckets)
-            .persist()
-          var candIdxPin: Option[DataFrame] = None
-          try {
-            // 1. candidates vs the persisted index (bp- and epoch-pruned);
-            // persisted: the sb-collect below and the verify join both
-            // consume it — without the pin the pruned index read + band
-            // join would run twice per batch
-            val candIdx = indexCandidates(spark, bandsDir, bb, epochId)
-              .persist()
-            candIdxPin = Some(candIdx)
-            mark("bands+cands")
-            // fetch earlier docs' shingles — pruned to candidate id buckets
-            val sbs = candIdx.select(pmod(col("id_a"), lit(idBuckets.toLong)))
-              .distinct().collect().map(_.getLong(0)).toSeq
-            mark("sbs-collect")
-            val idxSh = readIndexOrEmpty(spark, shDir, sh)
-              .filter(col("epoch") < epochId &&
-                (if (sbs.isEmpty) lit(false) else col("sb").isin(sbs: _*)))
-              .select(col("doc_id").as("id"), col("sh"))
-            val shBatch = sh.select(col("doc_id").as("id"), col("sh"))
-            // 2. candidates within the batch (arrival tie-break: id order)
-            val a = bb.toDF("id_a", "band_hash", "bp")
-            val b = bb.toDF("id_b", "band_hash", "bp")
-            val candSelf = a.join(b.hint("shuffle_hash"), Seq("band_hash"))
-              .filter(col("id_a") < col("id_b"))
-              .select("id_a", "id_b").distinct()
-            // ONE verify serves both candidate sources — the pair schema
-            // is shared and one lookup table covers every id: index-pair
-            // id_a's come from idxSh, self-pair ids and every id_b from
-            // shBatch; ids are unique across the union (the
-            // epoch < current filter excludes a replayed batch's own
-            // index entries, and a doc is indexed in exactly one epoch)
-            val dropped = TextOps.verifyExactJaccard(
-                candIdx.unionByName(candSelf),
-                idxSh.unionByName(shBatch), threshold)
-              .select(col("id_b").as("dropped_id")).distinct()
-            mark("plan-dropped")
-
-            // Epoch is CONSTANT within a batch, so each write targets an
-            // explicit epoch=<id> subdirectory with a plain overwrite —
-            // replay-idempotent exactly like dynamic partition overwrite
-            // (the replayed epoch rewrites only its own directory), but
-            // without the dynamic commit protocol, whose staging +
-            // per-partition moves measured 5-6 s per batch on the bands
-            // index. key=value directory naming keeps the readers'
-            // partition discovery (and the epoch prune) unchanged.
-            def epochWrite(df: DataFrame, bucket: Option[String],
-                           path: String): Unit = {
-              val w = df.write.mode("overwrite")
-              bucket.fold(w)(b => w.partitionBy(b))
-                .parquet(s"$path/epoch=$epochId")
-            }
-
-            // The three writes target DISTINCT epoch dirs and share only
-            // persisted inputs, so they run as CONCURRENT Spark jobs:
-            // each write's cost is dominated by per-file fixed overhead
-            // (~15 ms/file — the bucket-fanout sizing note above), and
-            // running them sequentially stacked those floors (measured
-            // ~2× on the batch's write phase). Replay idempotence is
-            // unchanged — a crash mid-phase leaves partial epoch dirs
-            // the replayed batch overwrites one by one.
-            // kept output (short docs bypass candidates → always kept) —
-            // NOT bucket-repartitioned: epoch is its only key, so that
-            // would serialize the write.
-            // index appends: ALL eligible docs, kept or dropped
-            // (all-seen); repartition on the bucket key BEFORE
-            // partitionBy (the delayed_due one-file-per-bucket idiom) —
-            // without it every task writes a sliver into every bucket
-            // dir, whose footer reads every LATER batch then pays.
-            parallelWrites(spark,
-              () => epochWrite(cached
-                .join(dropped, col(idCol) === col("dropped_id"), "left_anti"),
-                None, outDir),
-              () => epochWrite(bb.repartition(col("bp")), Some("bp"), bandsDir),
-              () => epochWrite(sh.repartition(col("sb")), Some("sb"), shDir))
-            mark("writes(par)")
-          } finally {
-            bb.unpersist(); sh.unpersist()
-            candIdxPin.foreach(_.unpersist()); ()
-          }
-        } finally {
-          cached.unpersist()
-          pendingFold.foreach(_.await())
-          mark("fold-await")
-        }
-      }
-      .start()
+    IndexedEpoch.start(docs, checkpointDir, "nd", levels(indexDir),
+        compactEvery) { (e, batch) =>
+      val cached = e.pin(batch)
+      // sub-shingle-width docs: never near-dups, never indexed
+      val eligible = cached.filter(size(split(col(textCol), " ")) >= shingleN)
+      val (dropped, indexWrites) = nearDupStage(e, eligible, indexDir,
+        threshold, idCol, textCol, shingleN, numHashes, bands, bandBuckets,
+        idBuckets)
+      // kept output (short docs bypass candidates → always kept) — NOT
+      // bucket-repartitioned: epoch is its only key, so that would
+      // serialize the write
+      IndexedEpoch.parallelWrites(e.spark,
+        (() => e.write(cached
+          .join(dropped, col(idCol) === col("dropped_id"), "left_anti"),
+          None, outDir)) +: indexWrites: _*)
+      e.mark("writes(par)")
+    }
   }
 }

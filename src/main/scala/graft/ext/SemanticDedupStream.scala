@@ -1,6 +1,5 @@
 package graft.ext
 
-import graft.log.PathIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -45,9 +44,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * explicit `epoch=<id>` subdirectory with a plain overwrite; candidate
  * reads filter `epoch < current`, so a replayed batch rewrites its own
  * epoch and never sees its own half-written entries (the
- * [[NearDupStream]] protocol, same crash analysis). Scheduled index
- * compaction reuses [[NearDupStream.compactIndex]] verbatim — one
- * level, bucket column `cb`.
+ * [[IndexedEpoch]] protocol, same crash analysis). Scheduled index
+ * compaction is [[IndexIO.compact]] — one level, bucket column `cb`.
  *
  * Scale, per batch: one quantize pass over the batch; a SHUFFLE_HASH
  * join against the (epoch, cb)-pruned index slice keyed on `cluster`
@@ -78,10 +76,6 @@ object SemanticDedupStream {
         col(vecCol).as("v"))
       .withColumn("cb", pmod(col("cluster"), lit(clusterBuckets.toLong)))
 
-  private def readIndexOrEmpty(spark: SparkSession, path: String,
-                               like: DataFrame): DataFrame =
-    IndexIO.read(spark, path, like)
-
   /** Earlier-arrival (id_a = indexed vec, id_b = batch vec) DROP
     * verdicts for one batch against the persisted index: the read is
     * pruned to `epoch < epoch` AND the batch's own cb buckets (both
@@ -93,7 +87,7 @@ object SemanticDedupStream {
     // bounded collect: ≤ ClusterBuckets values by construction
     val cbs = batchQ.select("cb").distinct()
       .collect().map(_.getLong(0)).toSeq
-    val idx = readIndexOrEmpty(spark, vecsDir, batchQ)
+    val idx = IndexIO.read(spark, vecsDir, batchQ)
       .filter(col("epoch") < epoch &&
         (if (cbs.isEmpty) lit(false) else col("cb").isin(cbs: _*)))
     // SHUFFLE_HASH keyed on cluster: per-cluster pair work is quadratic
@@ -114,7 +108,7 @@ object SemanticDedupStream {
    * across batches and restarts; `checkpointDir` is the Structured
    * Streaming checkpoint. `compactEvery = Some(n)` folds all index
    * epochs below the current batch into one directory every n batches
-   * (crash-safe [[NearDupStream.compactIndex]] swap — bounds index
+   * (crash-safe [[IndexIO.compact]] swap — bounds index
    * metadata for long-running streams). Returns the running query —
    * callers drain with `processAllAvailable`.
    */
@@ -126,88 +120,34 @@ object SemanticDedupStream {
           compactEvery: Option[Int] = None): StreamingQuery = {
     require(clusterBits >= 1 && clusterBits <= 32,
       s"clusterBits $clusterBits not in [1,32]")
-    require(compactEvery.forall(_ >= 2), "compactEvery must be >= 2")
     val vecsDir = s"$indexDir/vecs"
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val spark = batch.sparkSession
-        BatchTune.adapt(batch, indexBytes = IndexIO.committedBytes(vecsDir))
-        val dbg = sys.env.contains("SPARK_GRAFT_ND_DEBUG")
-        var tPrev = System.nanoTime()
-        def mark(st: String): Unit = if (dbg) {
-          val t = System.nanoTime()
-          println(f"[sd-debug] epoch=$epochId $st%-14s ${(t - tPrev) / 1e9}%6.2fs")
-          tPrev = t
-        }
-        // finish (or discard) any crash-interrupted compaction BEFORE
-        // reading the index; then fold on schedule — every folded epoch
-        // is committed (this batch is the only possibly-uncommitted one).
-        // The fold runs CONCURRENTLY with the batch body (guide §2.6;
-        // gcNow=false defers subsumed-dir deletes to the next batch's
-        // resume — the NearDupStream overlap rationale), awaited in the
-        // batch's finally.
-        NearDupStream.resumeCompaction(vecsDir)
-        val pendingFold = compactEvery.collect {
-          case n if epochId > 0 && epochId % n == 0 =>
-            NearDupStream.startJobs(spark,
-              () => NearDupStream.compactIndex(spark, vecsDir, "cb",
-                epochId - 1, gcNow = false))
-        }
-        mark("compaction")
-        val cached = batch.persist()
-        try {
-          val q = quantized(cached, idCol, vecCol, clusterBits,
-            clusterBuckets).persist()
-          try {
-            // 1. drops vs the persisted index ((epoch, cb)-pruned)
-            val idxDropped = indexDropped(spark, vecsDir, q, epochId, threshold)
-            mark("quantize+idx")
-            // 2. drops within the batch (arrival tie-break: id order)
-            val a = q.select(col("vec_id").as("id_a"), col("cluster"),
-              col("v").as("va"))
-            val b = q.select(col("vec_id").as("id_b"), col("cluster"),
-              col("v").as("vb"))
-            val selfDropped = a.join(b.hint("shuffle_hash"), Seq("cluster"))
-              .filter(col("id_a") < col("id_b"))
-              .filter(round(VectorOps.cosine(col("va"), col("vb")), 6) >= threshold)
-              .select(col("id_b").as("dropped_id")).distinct()
-            val dropped = idxDropped.unionByName(selfDropped).distinct()
-
-            // epoch-constant writes: explicit epoch=<id> dir + plain
-            // overwrite = replay-idempotent (NearDupStream protocol).
-            // The two writes are independent (distinct dirs, persisted
-            // inputs) and run as concurrent Spark jobs — per-file fixed
-            // costs dominate both, so sequential writes stack floors.
-            def epochWrite(df: DataFrame, bucket: Option[String],
-                           path: String): Unit = {
-              val w = df.write.mode("overwrite")
-              bucket.fold(w)(bk => w.partitionBy(bk))
-                .parquet(s"$path/epoch=$epochId")
-            }
-            // index append: ALL batch vecs, kept or dropped (all-seen);
-            // repartition on cb BEFORE partitionBy: ≤ one file per
-            // bucket per epoch (the NearDupStream write idiom)
-            def timed(label: String)(w: => Unit): () => Unit = () => {
-              val t0 = System.nanoTime()
-              w
-              if (dbg) println(f"[sd-debug] epoch=$epochId   w:$label%-10s " +
-                f"${(System.nanoTime() - t0) / 1e9}%6.2fs")
-            }
-            NearDupStream.parallelWrites(spark,
-              timed("kept") { epochWrite(cached
-                .join(dropped, col(idCol) === col("dropped_id"), "left_anti"),
-                None, outDir) },
-              timed("index") { epochWrite(q.repartition(col("cb")),
-                Some("cb"), vecsDir) })
-            mark("writes(par)")
-          } finally { q.unpersist(); () }
-        } finally {
-          cached.unpersist()
-          pendingFold.foreach(_.await())
-          mark("fold-await")
-        }
-      }
-      .start()
+    IndexedEpoch.start(vecs, checkpointDir, "sd", Seq(vecsDir -> "cb"),
+        compactEvery) { (e, batch) =>
+      val cached = e.pin(batch)
+      val q = e.pin(quantized(cached, idCol, vecCol, clusterBits,
+        clusterBuckets))
+      // 1. drops vs the persisted index ((epoch, cb)-pruned)
+      val idxDropped = indexDropped(e.spark, vecsDir, q, e.id, threshold)
+      e.mark("quantize+idx")
+      // 2. drops within the batch (arrival tie-break: id order)
+      val a = q.select(col("vec_id").as("id_a"), col("cluster"),
+        col("v").as("va"))
+      val b = q.select(col("vec_id").as("id_b"), col("cluster"),
+        col("v").as("vb"))
+      val selfDropped = a.join(b.hint("shuffle_hash"), Seq("cluster"))
+        .filter(col("id_a") < col("id_b"))
+        .filter(round(VectorOps.cosine(col("va"), col("vb")), 6) >= threshold)
+        .select(col("id_b").as("dropped_id")).distinct()
+      val dropped = idxDropped.unionByName(selfDropped).distinct()
+      // index append: ALL batch vecs, kept or dropped (all-seen);
+      // repartition on cb BEFORE partitionBy: ≤ one file per bucket per
+      // epoch (the NearDupStream write idiom)
+      IndexedEpoch.parallelWrites(e.spark,
+        () => e.write(cached
+          .join(dropped, col(idCol) === col("dropped_id"), "left_anti"),
+          None, outDir),
+        () => e.write(q.repartition(col("cb")), Some("cb"), vecsDir))
+      e.mark("writes(par)")
+    }
   }
 }

@@ -189,7 +189,7 @@ class NearDupStreamSpec extends SparkSpec {
       .parquet(s"$bands/epoch=0", s"$bands/epoch=1").drop("epoch")
     olds.repartition(col("bp")).write.partitionBy("bp")
       .parquet(s"$bands/_fold-1-0/epoch=1")
-    NearDupStream.resumeCompaction(bands.toString)
+    IndexIO.resume(bands.toString)
     assert(!java.nio.file.Files.exists(bands.resolve("_fold-1-0")))
     assert(IndexIO.committedEpochs(bands.toString) === Seq(0L, 1L, 2L))
     assert(bandLevel.select("doc_id", "band_hash").collect().toSet === before)
@@ -203,7 +203,7 @@ class NearDupStreamSpec extends SparkSpec {
     assert(IndexIO.committedEpochs(bands.toString) === Seq(1L, 2L))
     assert(bandLevel.select("doc_id", "band_hash").collect().toSet === before,
       "subsumed plain epochs must not double-count")
-    NearDupStream.resumeCompaction(bands.toString)
+    IndexIO.resume(bands.toString)
     assert(!java.nio.file.Files.exists(bands.resolve("epoch=0")))
     assert(bandLevel.select("doc_id", "band_hash").collect().toSet === before)
     assert(bandLevel.groupBy("doc_id", "band_hash").count()
@@ -213,13 +213,13 @@ class NearDupStreamSpec extends SparkSpec {
     java.nio.file.Files.write(
       bands.resolve("_fold-2-1").resolve("part-stale.parquet"),
       Array[Byte](1, 2, 3))
-    NearDupStream.resumeCompaction(bands.toString)
+    IndexIO.resume(bands.toString)
     assert(!java.nio.file.Files.exists(bands.resolve("_fold-2-1")))
     assert(IndexIO.committedEpochs(bands.toString) === Seq(1L, 2L))
     // a legacy rename-swap tmp dir fails LOUDLY (never misparsed)
     java.nio.file.Files.createDirectories(bands.resolve("_compact_tmp-1"))
     intercept[RuntimeException] {
-      NearDupStream.resumeCompaction(bands.toString)
+      IndexIO.resume(bands.toString)
     }
     java.nio.file.Files.delete(bands.resolve("_compact_tmp-1"))
   }

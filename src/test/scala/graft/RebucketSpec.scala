@@ -151,7 +151,7 @@ class RebucketSpec extends SparkSpec {
       PathIO.path(bands.toString, "_live-1-0"), "_fold-1-0".getBytes))
     assert(IndexIO.committedEpochs(bands.toString) === Seq(1L))
     assert(level.select("doc_id", "band_hash").collect().toSet === before)
-    NearDupStream.resumeCompaction(bands.toString)
+    IndexIO.resume(bands.toString)
     assert(!java.nio.file.Files.exists(bands.resolve("epoch=0")))
     assert(!java.nio.file.Files.exists(bands.resolve("epoch=1")))
     assert(level.select("doc_id", "band_hash").collect().toSet === before)
@@ -160,7 +160,7 @@ class RebucketSpec extends SparkSpec {
     // window B: fold data WITHOUT a pointer discards untouched
     Seq((99L, 99L, 3L)).toDF("doc_id", "band_hash", "bp")
       .write.partitionBy("bp").parquet(s"$bands/_fold-1-1/epoch=1")
-    NearDupStream.resumeCompaction(bands.toString)
+    IndexIO.resume(bands.toString)
     assert(!java.nio.file.Files.exists(bands.resolve("_fold-1-1")))
     assert(level.select("doc_id", "band_hash").collect().toSet === before)
   }
