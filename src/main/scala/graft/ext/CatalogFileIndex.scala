@@ -1,7 +1,5 @@
 package graft.ext
 
-import graft.log.DirectCommitProtocol
-
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -11,29 +9,25 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
- * A manifest-backed [[FileIndex]] over the streaming-index epoch
- * layout — the read-side half of the rename-free object-store posture
- * ([[graft.log.DirectCommitProtocol]] is the write side). Spark's
+ * A [[FileIndex]] over a known file set of the streaming-index epoch
+ * layout — how [[IndexIO]] plans every persisted-index read. Spark's
  * default partition discovery LISTs every epoch directory AND every
- * bucket subdirectory under every read root on every batch: the
- * round-15 `os_stream` cost record measured LIST/batch growing
- * ~+103 per live epoch between folds — O(epochs × buckets) requests
- * to plan a read that then PRUNES most of what was listed. The
- * direct committer already records each job's exact file set (relative
- * path + size) in its `_SUCCESS` manifest, so a committed epoch dir's
- * contents are knowable for ONE GET; this index feeds those recorded
- * files straight into a [[HadoopFsRelation]] — zero LIST, zero HEAD at
+ * bucket subdirectory under every read root on every batch (a
+ * parallel-listing job once a root holds more than 32 bucket dirs) and
+ * infers the data schema from a footer in one more job per basePath
+ * group; the round-15 `os_stream` cost record measured LIST/batch
+ * growing ~+103 per live epoch between folds — O(epochs × buckets)
+ * requests to plan a read that then PRUNES most of what was listed.
+ * [[IndexIO]] already knows each committed root's file set (the
+ * direct-commit `_SUCCESS` manifest, one GET; otherwise one driver-side
+ * walk), so this index feeds those files straight into a
+ * [[HadoopFsRelation]] — no Spark job and no further LIST or HEAD at
  * scan planning, with partition pruning evaluated natively against the
  * recorded `(epoch, bucket)` values (the same name-bound predicate
  * form Spark's own `PartitioningAwareFileIndex` uses). The reference's
  * cold tier reads the same way — an index block enumerating immutable
  * data blocks, never a directory listing (tiered-storage/jcloud/.../
  * OffloadIndexBlockImpl.java).
- *
- * Instances are built by [[IndexIO.read]] when every committed root
- * carries a direct-commit manifest (object-store-written levels);
- * levels written by the stock committer fall back to listing-based
- * discovery unchanged.
  */
 private[ext] object CatalogFileIndex {
 
@@ -41,9 +35,9 @@ private[ext] object CatalogFileIndex {
     * (all LongType in this layout), absolute path, size in bytes. */
   final case class Entry(partValues: Seq[Long], path: Path, size: Long)
 
-  /** Parse one manifest line's relative path into (partition col names,
+  /** Parse one root-relative file path into (partition col names,
     * values) from its `k=v` directory segments; None when a segment
-    * isn't a `name=long` pair (caller falls back to listing). */
+    * isn't a `name=long` pair. */
   def parseRel(rel: String): Option[(Seq[String], Seq[Long])] = {
     val segs = rel.split('/').toSeq.dropRight(1)
     val parsed = segs.map { s =>
@@ -59,13 +53,16 @@ private[ext] object CatalogFileIndex {
 
   /** Assemble the catalog DataFrame: files grouped into partition
     * directories keyed by their recorded values, typed by `partCols`
-    * (epoch first, then the level's bucket column), with `dataSchema`
-    * taken from the caller's `like` frame instead of a footer read. */
-  def relation(spark: SparkSession, levelPath: Path, partCols: Seq[String],
+    * (epoch first, then the level's bucket column; nullable, as
+    * discovered partition columns are, so `epoch <` filters infer the
+    * `isnotnull(epoch)` PartitionFilter), with `dataSchema` supplied by
+    * the caller. `rootPaths` are the read roots the plan's `Location`
+    * shows. */
+  def relation(spark: SparkSession, rootPaths: Seq[Path], partCols: Seq[String],
                entries: Seq[Entry], dataSchema: StructType): DataFrame = {
     val partSchema = StructType(partCols.map(c =>
-      StructField(c, LongType, nullable = false)))
-    val index = new CatalogFileIndex(levelPath, partSchema, entries)
+      StructField(c, LongType, nullable = true)))
+    val index = new CatalogFileIndex(rootPaths, partSchema, entries)
     // everything nullable, as footer-inferred reads are (asNullable is
     // private[sql]; the caller's `like` frame may carry tighter marks)
     val dataNullable = StructType(dataSchema.fields.map(_.copy(nullable = true)))
@@ -76,7 +73,7 @@ private[ext] object CatalogFileIndex {
 }
 
 private[ext] final class CatalogFileIndex(
-    levelPath: Path,
+    override val rootPaths: Seq[Path],
     override val partitionSchema: StructType,
     entries: Seq[CatalogFileIndex.Entry]) extends FileIndex {
 
@@ -88,8 +85,6 @@ private[ext] final class CatalogFileIndex(
           fs.map(e => new FileStatus(e.size, false, 1, 128L * 1024 * 1024,
             0L, e.path)).toArray)
       }
-
-  override def rootPaths: Seq[Path] = Seq(levelPath)
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] =

@@ -1,8 +1,9 @@
 package graft.ext
 
-import graft.log.PathIO
+import graft.log.{DirectCommitProtocol, PathIO}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * Storage protocol of the persisted streaming-dedup indexes
@@ -106,92 +107,125 @@ private[graft] object IndexIO {
     (live.map(_.upTo).toSeq ++ plain.map(_._1)).sorted
   }
 
-  /** Root paths of the committed view, paired with the basePath each
-    * must be read under (plain dirs under the level dir; the fold's
-    * `epoch=<upTo>` subtree under its own `_fold-*` dir, so partition
-    * parsing sees the identical `epoch=`/`<bucket>=` segments) and the
-    * root's epoch id. */
-  private def committedRoots(levelDir: String): Seq[(String, String, Long)] = {
+  /** One root of a committed view: its dir, the basePath it is grouped
+    * under (the level dir for plain epochs; the live fold's own `_fold-*`
+    * dir for its `epoch=<upTo>` subtree, so both parse the identical
+    * `<bucket>=` segments below an `epoch=` dir) and its epoch id. */
+  private final case class Root(base: String, dir: HPath, epoch: Long)
+
+  private def committedRoots(levelDir: String): Seq[Root] = {
     val dir = PathIO.path(levelDir)
     val (live, plain) = view(dir)
+    roots(dir, live, plain)
+  }
+
+  private def roots(dir: HPath, live: Option[Pointer],
+                    plain: Seq[(Long, HPath)]): Seq[Root] = {
     val foldRoot = live.map { p =>
       val base = PathIO.child(dir, p.foldName)
-      (base.toString, PathIO.child(base, s"epoch=${p.upTo}").toString, p.upTo)
+      Root(base.toString, PathIO.child(base, s"epoch=${p.upTo}"), p.upTo)
     }
-    plain.map { case (e, p) => (levelDir, p.toString, e) } ++ foldRoot
+    plain.map { case (e, p) => Root(dir.toString, p, e) } ++ foldRoot
   }
 
   /** Read the committed view of one level (partition columns `epoch` +
-    * the bucket column intact, so `epoch <`/`bucket isin` filters stay
-    * PartitionFilters on every branch); empty-with-schema when the
-    * level doesn't exist yet. `like` supplies the data schema.
+    * the bucket column, nullable `LongType`, so `epoch <`/`bucket isin`
+    * filters stay PartitionFilters on every branch); empty-with-schema
+    * when the level doesn't exist yet or no committed root holds a data
+    * file. `like` supplies the data schema.
     *
-    * Discovery cost: when EVERY committed root carries a
-    * [[graft.log.DirectCommitProtocol]] manifest (levels written on
-    * object-store schemes), the read plans from the recorded file sets
-    * through a [[CatalogFileIndex]] — one GET per root, ZERO directory
-    * LISTs — instead of Spark's recursive discovery, whose
-    * O(epochs × buckets) LISTs were the one per-epoch-growing request
-    * axis in the round-15 os_stream record. Stock-committed levels
-    * (local/HDFS, where listing is a namenode call, not a billed
-    * request) keep the listing path byte-identically. */
-  def read(spark: SparkSession, levelDir: String, like: DataFrame): DataFrame = {
-    val roots = committedRoots(levelDir)
-    if (roots.isEmpty) like.withColumn("epoch", lit(0L)).limit(0)
-    else catalogRead(spark, levelDir, roots, like).getOrElse(listingRead(spark, roots))
-  }
-
-  /** The listing-discovery read branch (pre-round-16 behavior). */
-  private def listingRead(spark: SparkSession,
-                          roots: Seq[(String, String, Long)]): DataFrame =
-    roots.groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (base, rs) =>
-        spark.read.option("basePath", base).parquet(rs.map(_._2): _*)
-      }
-      .reduce(_.unionByName(_))
-
-  /** The manifest-catalog read branch: Some(df) iff every root's
-    * `_SUCCESS` is a direct-commit manifest with a uniform `k=v`
-    * partition-segment layout; None falls back to listing (mixed or
-    * stock-committed levels, irregular names). */
-  private def catalogRead(spark: SparkSession, levelDir: String,
-                          roots: Seq[(String, String, Long)],
-                          like: DataFrame): Option[DataFrame] = {
-    import graft.log.DirectCommitProtocol
-    val perRoot = roots.map { case (_, root, epoch) =>
-      DirectCommitProtocol.readManifest(root).map { mf =>
-        mf.map { case (rel, size) =>
-          CatalogFileIndex.parseRel(rel).map { case (cols, vals) =>
-            (cols, CatalogFileIndex.Entry(epoch +: vals,
-              PathIO.path(root, rel), size))
-          }
-        }
-      }
-    }
-    if (perRoot.exists(_.isEmpty)) return None // a stock-committed root
-    val flat = perRoot.flatMap(_.get)
-    if (flat.exists(_.isEmpty)) return None // unparseable segment layout
-    val parsed = flat.flatten
-    if (parsed.isEmpty) return None // all-empty manifests: let listing decide
-    val colSets = parsed.map(_._1).distinct
-    if (colSets.size != 1) return None // non-uniform bucket segments
-    val partCols = "epoch" +: colSets.head
-    val partSet = partCols.toSet
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      like.schema.fields.filterNot(f => partSet.contains(f.name)))
-    Some(CatalogFileIndex.relation(spark, PathIO.path(levelDir), partCols,
-      parsed.map(_._2), dataSchema))
-  }
+    * Planning cost: no Spark job and no LIST beyond each root's file
+    * set ([[plan]]) — a root carrying a [[graft.log.DirectCommitProtocol]]
+    * manifest (levels written on object-store schemes) costs one GET,
+    * a stock-committed root (local/HDFS) one driver-side walk. Spark's
+    * own discovery would re-list what [[view]] already listed (O(epochs
+    * × buckets) LISTs, a parallel-listing job per 64-bucket root) and
+    * infer the schema in one more job per basePath group, every batch. */
+  def read(spark: SparkSession, levelDir: String, like: DataFrame): DataFrame =
+    plan(spark, committedRoots(levelDir), _ => like.schema)
+      .getOrElse(like.withColumn("epoch", lit(0L)).limit(0))
 
   /** [[read]] of a level that must already have committed entries —
     * the ops/verification form. No `like` schema is available here, so
-    * it stays on the listing branch (footer-inferred schema); these
-    * callers read the whole level anyway, so discovery cost tracks the
-    * data read. */
+    * the data schema comes from one footer ([[footerSchema]]); a level
+    * whose roots hold no data file reads as an empty `epoch` column. */
   private[graft] def readLevel(spark: SparkSession, levelDir: String): DataFrame = {
     val roots = committedRoots(levelDir)
     require(roots.nonEmpty, s"no committed index entries under $levelDir")
-    listingRead(spark, roots)
+    plan(spark, roots, footerSchema)
+      .getOrElse(spark.emptyDataFrame.withColumn("epoch", lit(0L)))
+  }
+
+  /** Plan `roots` from their file sets with no Spark job: one
+    * [[CatalogFileIndex]] relation per basePath group (the plain roots;
+    * the live fold's subtree), each with its group's roots as
+    * `rootPaths`, unioned by name. `dataSchema` gives the data schema
+    * for the planned files (partition columns are dropped from it).
+    * None when no root holds a data file — a zero-row epoch write
+    * leaves only `epoch=<id>/_SUCCESS`. */
+  private def plan(spark: SparkSession, roots: Seq[Root],
+                   dataSchema: Seq[CatalogFileIndex.Entry] => StructType)
+      : Option[DataFrame] = {
+    val groups = roots.groupBy(_.base).toSeq.sortBy(_._1)
+      .map { case (_, rs) => (rs.map(_.dir), rs.flatMap(rootFiles)) }
+      .filter(_._2.nonEmpty)
+    if (groups.isEmpty) return None
+    val layouts = groups.flatMap(_._2.map(_._1)).distinct
+    require(layouts.size == 1, s"index roots ${roots.map(_.dir).mkString(", ")} " +
+      s"mix partition layouts ${layouts.map(_.mkString("/")).mkString(", ")}")
+    val partCols = "epoch" +: layouts.head
+    val data = StructType(dataSchema(groups.flatMap(_._2.map(_._2)))
+      .filterNot(f => partCols.contains(f.name)))
+    Some(groups.map { case (dirs, fs) =>
+      CatalogFileIndex.relation(spark, dirs, partCols, fs.map(_._2), data)
+    }.reduce(_.unionByName(_)))
+  }
+
+  /** One root's data files with their partition layout (the `k=v`
+    * segment names below the root) and values, the root's epoch first:
+    * from the direct-commit manifest when the root has one, else from
+    * [[walkDataFiles]]. */
+  private def rootFiles(r: Root): Seq[(Seq[String], CatalogFileIndex.Entry)] =
+    DirectCommitProtocol.readManifest(r.dir.toString)
+      .getOrElse(walkDataFiles(r.dir))
+      .map { case (rel, size) =>
+        val (cols, vals) = CatalogFileIndex.parseRel(rel).getOrElse(sys.error(
+          s"index file ${r.dir}/$rel is not under name=<long> partition dirs"))
+        (cols, CatalogFileIndex.Entry(r.epoch +: vals, PathIO.child(r.dir, rel), size))
+      }
+
+  /** (root-relative path, bytes) of every data file under a
+    * stock-committed root, by one driver-side walk that skips `_`/`.`
+    * names at every depth as Spark's discovery does (`_SUCCESS`, a
+    * leftover `_temporary/`, checksum siblings). */
+  private def walkDataFiles(root: HPath): Seq[(String, Long)] = {
+    val fs = PathIO.fs(root)
+    def go(dir: HPath, rel: String): Seq[(String, Long)] =
+      fs.listStatus(dir).toSeq
+        .filterNot(st => st.getPath.getName.startsWith("_") ||
+          st.getPath.getName.startsWith("."))
+        .flatMap { st =>
+          val r = rel + st.getPath.getName
+          if (st.isDirectory) go(st.getPath, r + "/") else Seq((r, st.getLen))
+        }
+    go(root, "")
+  }
+
+  /** Data schema of a file set from ONE footer, read on the driver (no
+    * Spark job): Spark's row-metadata key when the writer recorded it,
+    * else the parquet schema converted — what discovery's
+    * `mergeSchema = false` inference returns for a uniform level. */
+  private def footerSchema(entries: Seq[CatalogFileIndex.Entry]): StructType = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
+    import org.apache.spark.sql.internal.SQLConf
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(entries.head.path, PathIO.conf))
+    val meta = try reader.getFooter.getFileMetaData finally reader.close()
+    Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get).convert(meta.getSchema))
   }
 
   /** On-disk bytes of one level's committed view — the index-size
@@ -199,17 +233,9 @@ private[graft] object IndexIO {
     * (a trickle batch against a large index must not fold/join the
     * whole index through 2 reducers). Manifest-first: a direct-commit
     * root answers from its recorded file sizes (one GET, no LIST);
-    * stock-committed roots pay one recursive walk. */
+    * stock-committed roots pay one walk. */
   private[graft] def committedBytes(levelDir: String): Long =
-    committedRoots(levelDir).map { case (_, root, _) =>
-      graft.log.DirectCommitProtocol.readManifest(root) match {
-        case Some(mf) => mf.map(_._2).sum
-        case None =>
-          val hp = PathIO.path(root)
-          if (!PathIO.exists(hp)) 0L
-          else PathIO.walkStatuses(hp).filter(!_.isDirectory).map(_.getLen).sum
-      }
-    }.sum
+    committedRoots(levelDir).flatMap(rootFiles).map(_._2.size).sum
 
   /** Heal + garbage-collect one level (see class doc crash windows).
     * Idempotent; every stream batch runs it before reading. */
@@ -275,39 +301,30 @@ private[graft] object IndexIO {
     if (!PathIO.exists(dir)) return
     resume(levelDir) // finish/discard anything pending before folding
     val (live, plain) = view(dir)
-    val liveEntry = live.map(p =>
-      (p.upTo, PathIO.path(PathIO.child(dir, p.foldName).toString,
-        s"epoch=${p.upTo}")))
-    val sources = (liveEntry.toSeq ++ plain)
-      .filter { case (e, _) => upTo.forall(e <= _) }
+    val sources = roots(dir, live, plain).filter(r => upTo.forall(r.epoch <= _))
     val minSources = if (rebucketTo.isDefined) 1 else 2
     if (sources.size < minSources) return
-    val foldPoint = sources.map(_._1).max
+    val foldPoint = sources.map(_.epoch).max
     val next = Pointer(foldPoint, live.map(_.gen + 1).getOrElse(0L))
     val foldBase = PathIO.child(dir, next.foldName)
     PathIO.deleteTree(foldBase): Unit // unreachable name unless resume raced
-    // the sources may span two basePaths (plain dirs vs the live fold's
-    // subtree) — read each group under its own base so `epoch` parses,
-    // then drop it (the fold dir IS the new epoch)
-    val byBase = sources.map { case (_, p) =>
-      val s = p.toString
-      if (liveEntry.exists(_._2.toString == s))
-        (PathIO.child(dir, live.get.foldName).toString, s)
-      else (levelDir, s)
+    val foldData = PathIO.child(foldBase, s"epoch=$foldPoint")
+    plan(spark, sources, footerSchema) match {
+      case Some(sourceDf) =>
+        // the fold dir IS the new epoch
+        val input = sourceDf.drop("epoch")
+        val rebucketed = rebucketTo.fold(input) { case (srcCol, n) =>
+          input.drop(bucketCol)
+            .withColumn(bucketCol, pmod(col(srcCol), lit(n.toLong)))
+        }
+        rebucketed.repartition(col(bucketCol))
+          .write.partitionBy(bucketCol).parquet(foldData.toString)
+      case None =>
+        // every source wrote zero rows: commit an empty fold, its
+        // `_SUCCESS` a manifest recording no files
+        PathIO.writeString(PathIO.child(foldData, DirectCommitProtocol.SuccessName),
+          DirectCommitProtocol.ManifestHeader)
     }
-    val input = byBase.groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (base, rs) =>
-        spark.read.option("basePath", base).parquet(rs.map(_._2): _*)
-      }
-      .reduce(_.unionByName(_))
-      .drop("epoch")
-    val rebucketed = rebucketTo.fold(input) { case (srcCol, n) =>
-      input.drop(bucketCol)
-        .withColumn(bucketCol, pmod(col(srcCol), lit(n.toLong)))
-    }
-    rebucketed.repartition(col(bucketCol))
-      .write.partitionBy(bucketCol)
-      .parquet(PathIO.child(foldBase, s"epoch=$foldPoint").toString)
     // the commit: one atomicCreate of the pointer. Single-writer, so a
     // loss means a competing folder — fail loudly, never replace.
     if (!PathIO.atomicCreate(PathIO.child(dir, next.ptrName),

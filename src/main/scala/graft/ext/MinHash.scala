@@ -183,6 +183,14 @@ object MinHash {
                            textCol: String = "text", shingleN: Int = 3): DataFrame = {
     val cands = simhashPairs(docs, maxHamming, idCol, textCol)
       .select("id_a", "id_b")
+    // NOT widened, unlike lshVerifiedPairs: there the candidate stage's
+    // minhash kernel justifies the round-robin exchange of the raw text;
+    // here the candidate stage runs unwidened (its 1-gram kernel is
+    // cheap), so widening would add that exchange for the one 3-gram
+    // pass alone. Measured with TimeOne (simhash_pairs, sf0.1 documents
+    // = one split, local[4], warm reps 2-5 of two runs each): wall
+    // 3.6-4.7 s unwidened vs 3.4-4.3 s widened, no difference beyond the
+    // spread; task time 2.6-3.7 s vs 2.8-3.4 s.
     val sh = docs.select(col(idCol).as("id"),
       graft.functions.Sketch.shingle_hashes(col(textCol), shingleN, distinct = true).as("sh"))
     TextOps.verifyExactJaccard(cands, sh, threshold)

@@ -4,6 +4,8 @@ import graft.ext.NearDupStream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** Contracts of the streaming near-dup filter the DuckDB oracle can't
   * reach: crash-replay idempotence of the epoch-partitioned writes, the
   * partition-pruned index read, the short-doc bypass, and unpersist
@@ -23,14 +25,18 @@ class NearDupStreamSpec extends SparkSpec {
     (5L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
     (6L, "yet another unrelated document mentioning broadcast joins and codegen"))
 
-  private def mkSlices(root: java.nio.file.Path): Unit = {
-    val docs = corpus.toDF("doc_id", "text")
+  private def mkSlices(root: java.nio.file.Path): Unit =
+    writeSlices(root, (0 until 3).map(i => corpus.filter(_._1 % 3 == i)))
+
+  /** One parquet file per slice, mtimes in slice order (one batch each
+    * under maxFilesPerTrigger = 1). */
+  private def writeSlices(root: java.nio.file.Path,
+                          slices: Seq[Seq[(Long, String)]]): Unit = {
     val base = System.currentTimeMillis() - 10000L
-    (0 until 3).foreach { i =>
+    slices.indices.foreach { i =>
       val tmp = java.nio.file.Files.createTempDirectory("nd-slice")
-      docs.filter(col("doc_id") % 3 === i).coalesce(1)
+      slices(i).toDF("doc_id", "text").coalesce(1)
         .write.mode("overwrite").parquet(tmp.toString)
-      import scala.jdk.CollectionConverters._
       val part = {
         val l = java.nio.file.Files.list(tmp)
         try l.iterator().asScala.find(_.toString.endsWith(".parquet")).get
@@ -71,6 +77,24 @@ class NearDupStreamSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet
     assert(!indexed.contains(3L))
     assert(indexed === Set(0L, 1L, 2L, 4L, 5L, 6L))
+  }
+
+  test("a first batch of only sub-shingle docs indexes nothing; the next batch still reads the index") {
+    val root = java.nio.file.Files.createTempDirectory("nd-root")
+    val idx = java.nio.file.Files.createTempDirectory("nd-idx")
+    val out = java.nio.file.Files.createTempDirectory("nd-out")
+    val ckpt = java.nio.file.Files.createTempDirectory("nd-ckpt")
+    writeSlices(root, Seq(Seq((10L, "too short"), (11L, "tiny")), corpus))
+    runStream(root, idx, out, ckpt)
+    // batch 0's index epochs committed zero rows: `_SUCCESS` only
+    Seq("bands", "shingles").foreach { level =>
+      val names = java.nio.file.Files.list(idx.resolve(level).resolve("epoch=0"))
+      try assert(names.iterator().asScala.map(_.getFileName.toString)
+        .filterNot(_.startsWith(".")).toSeq === Seq("_SUCCESS"))
+      finally names.close()
+    }
+    // batch 1 = the whole corpus: 1 and 5 drop within the batch
+    assert(keptIds(out) === Set(0L, 2L, 3L, 4L, 6L, 10L, 11L))
   }
 
   test("crash replay: deleting the last commit and restarting changes nothing") {
