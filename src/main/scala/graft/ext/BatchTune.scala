@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
  * Scale-adaptive shuffle sizing for the derived batch jobs inside a
@@ -65,15 +65,11 @@ private[graft] object BatchTune {
     // leaf stats carry exact file bytes for file-source batches; a plan
     // with no file leaf (rate/memory source, or stats unavailable)
     // keeps the session width — widths must never be guessed smaller
-    val fileBytes = batch.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes)
-      .filter(_ < BigInt(Long.MaxValue)) // defaultSizeInBytes = unknown
-      .sum
+    val fileBytes = leafSizes(batch).filter(_ < Unknown).sum
     if (fileBytes <= 0 && indexBytes <= 0) {
       spark.conf.set(key, ceiling.toString); return
     }
-    val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+    val maxSplit = splitBytes(spark)
     // ~4 reducers per input split (the measured r17 ratio: enough fan-in
     // for the band/cluster joins, no 32-way file churn for a one-split
     // batch); the index side mirrors EntryShared.adaptiveStreamWidth's
@@ -87,4 +83,23 @@ private[graft] object BatchTune {
       math.max(2L, math.max(batchWidth, indexWidth))).toInt
     spark.conf.set(key, width.toString)
   }
+
+  /** Whether the batch plus `indexBytes` of persisted index is smaller
+    * than one input split (`spark.sql.files.maxPartitionBytes`). A leaf
+    * of unknown size never counts as small. Costs no Spark job. */
+  private[graft] def underOneSplit(batch: DataFrame, indexBytes: Long): Boolean = {
+    val sizes = leafSizes(batch)
+    sizes.forall(_ < Unknown) &&
+      sizes.sum + indexBytes < splitBytes(batch.sparkSession)
+  }
+
+  /** `defaultSizeInBytes`: the stats of a leaf of unknown size. */
+  private val Unknown = BigInt(Long.MaxValue)
+
+  private def leafSizes(batch: DataFrame): Seq[BigInt] =
+    batch.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes)
+
+  private def splitBytes(spark: SparkSession): Long =
+    org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
 }

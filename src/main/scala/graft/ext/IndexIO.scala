@@ -46,6 +46,16 @@ import org.apache.spark.sql.types.{DataType, StructType}
  *    folded view ([[entries]] excludes subsumed dirs), resume finishes
  *    the deletes.
  *
+ * Scale notes: a fold writes its consolidated copy beside its sources,
+ * so while it runs a level holds its folded entries twice. The indexed
+ * streams fold with the deferred GC ([[compact]] with `gcNow = false`),
+ * so the sources go only at the NEXT batch's [[resume]]: the level's
+ * on-disk footprint stays about 2× its committed view from the fold's
+ * write until one batch later (until the first batch after a restart,
+ * if the stream stops right after a fold epoch). Provision each level
+ * for twice its largest committed view. [[committedBytes]] counts the
+ * committed view only, so the transient copy never widens a batch.
+ *
  * Single-writer by construction (foreachBatch is sequential; rebucket
  * is an offline op) — a lost pointer publish therefore means two
  * writers and fails loudly.

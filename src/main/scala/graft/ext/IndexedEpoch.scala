@@ -12,6 +12,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
  *
  * Per batch, in order:
  *  1. [[BatchTune.adapt]] with the summed committed bytes of the levels;
+ *     and, when the batch plus those bytes is under one input split
+ *     ([[BatchTune.underOneSplit]]), whole-stage codegen off on the
+ *     batch's session until the step returns (see below);
  *  2. [[IndexIO.resume]] on each level — finish (or discard) any
  *     crash-interrupted fold BEFORE the body reads the index;
  *  3. on schedule (`epoch > 0 && epoch % compactEvery == 0`) start one
@@ -37,6 +40,23 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * without the dynamic commit protocol, whose staging + per-partition
  * moves measured 5-6 s per batch on the bands index. `key=value`
  * naming keeps readers' partition discovery and the epoch prune.
+ *
+ * Codegen: one fold cycle of an indexed stream touches more distinct
+ * generated classes (~120 for [[CleanCorpusStream]]) than Spark's
+ * JVM-wide codegen cache holds (`spark.sql.codegen.cache.maxEntries`,
+ * a static conf, default 100), so the LRU cache missed on nearly every
+ * lookup and each small epoch compiled 68-112 classes with Janino. A
+ * batch under one input split never pays back a whole-stage compile
+ * (compile only where the work repays it — Kohn, Leis and Neumann,
+ * ICDE 2018), so such an epoch, and the folds it starts on the same
+ * session, plan without whole-stage codegen. Fewer classes are left
+ * (52 per fold cycle for [[NearDupStream]], 82 for
+ * [[CleanCorpusStream]]), so a steady-state epoch compiles none or a
+ * few: the cache's 4 segments of 25 can still overflow unevenly
+ * (`EpochCodegenSpec`). The rule only ever turns codegen off: a batch
+ * of one split or more keeps the session's value, and the value the
+ * session had is put back on every exit, after the fold is awaited
+ * (fold futures plan asynchronously).
  */
 private[graft] object IndexedEpoch {
 
@@ -92,25 +112,32 @@ private[graft] object IndexedEpoch {
                           compactEvery: Option[Int])
                          (body: (Epoch, DataFrame) => Unit): Unit = {
     val spark = batch.sparkSession
-    BatchTune.adapt(batch,
-      indexBytes = levels.map(l => IndexIO.committedBytes(l._1)).sum)
-    val e = new Epoch(spark, epochId, tag)
-    levels.foreach(l => IndexIO.resume(l._1))
-    val pendingFold = compactEvery.collect {
-      case n if epochId > 0 && epochId % n == 0 =>
-        startJobs(spark, levels.map { case (dir, bucketCol) => () =>
-          IndexIO.compact(spark, dir, bucketCol, epochId - 1, gcNow = false)
-        }: _*)
-    }
+    val indexBytes = levels.map(l => IndexIO.committedBytes(l._1)).sum
+    BatchTune.adapt(batch, indexBytes)
+    val wholeStage = spark.conf.get(WholeStage)
+    if (BatchTune.underOneSplit(batch, indexBytes))
+      spark.conf.set(WholeStage, "false")
     try {
-      e.mark("compaction")
-      body(e, batch)
-    } finally {
-      try e.release()
-      finally pendingFold.foreach(_.await())
-      e.mark("fold-await")
-    }
+      val e = new Epoch(spark, epochId, tag)
+      levels.foreach(l => IndexIO.resume(l._1))
+      val pendingFold = compactEvery.collect {
+        case n if epochId > 0 && epochId % n == 0 =>
+          startJobs(spark, levels.map { case (dir, bucketCol) => () =>
+            IndexIO.compact(spark, dir, bucketCol, epochId - 1, gcNow = false)
+          }: _*)
+      }
+      try {
+        e.mark("compaction")
+        body(e, batch)
+      } finally {
+        try e.release()
+        finally pendingFold.foreach(_.await())
+        e.mark("fold-await")
+      }
+    } finally spark.conf.set(WholeStage, wholeStage) // after the fold await
   }
+
+  private val WholeStage = "spark.sql.codegen.wholeStage"
 
   /** Run independent per-epoch writes as concurrent Spark jobs (they
     * target distinct directories and read only persisted inputs).

@@ -13,8 +13,8 @@ import java.nio.file.Files
  * dirs carry direct-commit manifests, reads plan from the recorded
  * file sets — ZERO directory LISTs beyond the level-dir view, full
  * partition pruning — and return exactly what listing discovery
- * returns. The listing branch stays the behavior for stock-committed
- * (local/HDFS) levels and any mixed level.
+ * returns. A stock-committed (local/HDFS) root has no manifest and is
+ * walked on the driver; a mixed level plans from both.
  */
 class CatalogReadSpec extends SparkSpec {
   MockS3FileSystem.register(SparkSpec.session.sparkContext.hadoopConfiguration)
@@ -91,7 +91,7 @@ class CatalogReadSpec extends SparkSpec {
     assert(after.forall(_._2 == 2L), "folded entries carry the fold-point epoch")
   }
 
-  test("a stock-committed root (no manifest) falls back to listing with identical results") {
+  test("a stock-committed root (no manifest) is walked on the driver: same rows") {
     val root = s"${MockS3FileSystem.Scheme}:" +
       Files.createTempDirectory("cat-mixed")
     mkLevel(root.toString, 2)

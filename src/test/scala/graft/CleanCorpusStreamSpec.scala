@@ -2,7 +2,9 @@ package graft
 
 import graft.ext.{CleanCorpusStream, NearDupStream, TextOps}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Contracts of the composed streaming clean-corpus pipeline the
   * DuckDB oracle can't reach: the order-equivalence claim (id-ordered
@@ -118,6 +120,12 @@ class CleanCorpusStreamSpec extends SparkSpec {
   }
 
   test("order-equivalence: stream kept set == batch composition on id-ordered arrival") {
+    orderEquivalence()
+  }
+
+  /** The order-equivalence claim on the controlled corpus, then on a
+    * larger, messier one streamed with `compactEvery = Some(2)`. */
+  private def orderEquivalence(): Unit = {
     val (root, idx, out, ckpt) = dirs()
     mkSlices(root); runStream(root, idx, out, ckpt)
     assert(keptIds(out) === batchTruth(docsDf))
@@ -155,6 +163,35 @@ class CleanCorpusStreamSpec extends SparkSpec {
       compactEvery = Some(2))
     try q.processAllAvailable() finally q.stop()
     assert(keptIds(out2) === batchTruth(big))
+  }
+
+  test("order-equivalence with every epoch at one input split or more: whole-stage codegen kept") {
+    // the stream's session is cloned from this one when it starts, and
+    // keeps its listeners and confs
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString): Unit
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+    try orderEquivalence()
+    finally {
+      spark.conf.unset("spark.sql.files.maxPartitionBytes")
+      spark.listenerManager.unregister(listener)
+    }
+    // an epoch's index and output writes, with a whole-stage stage `*(<id>)`;
+    // listener delivery is asynchronous
+    import scala.jdk.CollectionConverters._
+    def epochWrites = plans.asScala.filter(p =>
+      p.contains("InsertIntoHadoopFsRelationCommand") &&
+        (p.contains("cc-idx") || p.contains("cc-out")))
+    val deadline = System.currentTimeMillis() + 30000
+    while (!epochWrites.exists(_.contains("*(")) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(epochWrites.exists(_.contains("*(")),
+      s"no epoch write planned a whole-stage stage among ${epochWrites.size}")
   }
 
   test("crash replay: deleting the last commit and restarting changes nothing") {
