@@ -8,12 +8,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * the input size instead of a constant tuned for either local mode or
  * the cluster).
  *
- * Structured Streaming runs every microbatch on a CLONED session with
- * AQE force-disabled (ResolveWriteToStream), so the joins/aggregates/
- * repartitions a foreachBatch body issues inherit the session-wide
- * `spark.sql.shuffle.partitions` — a cluster-sized constant — however
- * small the batch is. Measured on `pipeline_clean_corpus_stream`
- * (sf0.1, local[32], 32 shuffle partitions): ~130 s of task-time for a
+ * Structured Streaming runs every microbatch on a CLONED session, and
+ * the joins/aggregates/repartitions a foreachBatch body issues start
+ * from that session's `spark.sql.shuffle.partitions` — a
+ * cluster-sized constant — however small the batch is. AQE is off
+ * only for the stream's own incremental plan: the body's queries are
+ * planned as `AdaptiveSparkPlan` (seen with a `QueryExecutionListener`
+ * on a [[CleanCorpusStream]] epoch: `AQEShuffleRead coalesced`, local
+ * shuffle reads), so AQE may coalesce below the width set here: the
+ * width is the ceiling of the batch's shuffles, and that ceiling is
+ * what a tiny batch must not inherit from the cluster. Measured on
+ * `pipeline_clean_corpus_stream` (sf0.1, local[32], 32 shuffle
+ * partitions): ~130 s of task-time for a
  * 15 s wall, with thread dumps showing the executors in shuffle-file
  * `FileOutputStream.open0` and the shuffle-commit lock — pure
  * tiny-task/file churn, not compute (the same query at local[8] ran
@@ -99,7 +105,8 @@ private[graft] object BatchTune {
   private def leafSizes(batch: DataFrame): Seq[BigInt] =
     batch.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes)
 
-  private def splitBytes(spark: SparkSession): Long =
+  /** `spark.sql.files.maxPartitionBytes`: one input split. */
+  private[graft] def splitBytes(spark: SparkSession): Long =
     org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
 }

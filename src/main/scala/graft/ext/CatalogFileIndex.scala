@@ -10,7 +10,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
  * A [[FileIndex]] over a known file set of the streaming-index epoch
- * layout — how [[IndexIO]] plans every persisted-index read. Spark's
+ * layout — how [[IndexIO]] plans every persisted-index read, one index
+ * per (basePath, layout) group: `epoch` plus the bucket column for
+ * bucketed roots, `epoch` alone for flat roots (whose files sit
+ * directly under `epoch=<id>`, the bucket a data column). Spark's
  * default partition discovery LISTs every epoch directory AND every
  * bucket subdirectory under every read root on every batch (a
  * parallel-listing job once a root holds more than 32 bucket dirs) and
@@ -53,7 +56,7 @@ private[ext] object CatalogFileIndex {
 
   /** Assemble the catalog DataFrame: files grouped into partition
     * directories keyed by their recorded values, typed by `partCols`
-    * (epoch first, then the level's bucket column; nullable, as
+    * (epoch first, then the bucket column of a bucketed root; nullable, as
     * discovered partition columns are, so `epoch <` filters infer the
     * `isnotnull(epoch)` PartitionFilter), with `dataSchema` supplied by
     * the caller. `rootPaths` are the read roots the plan's `Location`

@@ -49,8 +49,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * Exactly-once, crash recovery, compaction, and the 100 TB read-prune
  * story are [[NearDupStream]]'s, unchanged: every write targets an
  * explicit `epoch=<id>` directory (replay rewrites itself), candidate
- * reads filter `epoch < current` plus the batch's own hash/band/id
- * buckets (plan-gated), and scheduled folds ride the crash-safe
+ * reads filter `epoch < current` plus, on bucketed roots, the batch's
+ * own hash/band/id buckets (plan-gated; a level under one input split
+ * is written flat and read whole — [[IndexIO]] layouts), and
+ * scheduled folds ride the crash-safe
  * [[IndexIO.compact]] swap on all THREE index levels ([[IndexedEpoch]]).
  * All index bookkeeping rides [[graft.log.PathIO]] (Hadoop FileSystem).
  */
@@ -72,17 +74,14 @@ object CleanCorpusStream {
       .withColumn("hb", pmod(col("xh"), lit(hashBuckets.toLong)))
 
   /** Exact-duplicate DROP verdicts for one batch against the persisted
-    * hash index: read pruned to `epoch < epoch` AND the batch's hb
-    * buckets (both partition columns — exposed for the plan gate),
-    * then an equi-join on the full 128-bit md5. */
+    * hash index: read pruned to `epoch < epoch` AND, on bucketed roots,
+    * the batch's hb buckets ([[IndexIO.readBefore]] — exposed for the
+    * plan gate), then an equi-join on the full 128-bit md5. Equal texts
+    * share both hashes, so the hb prune drops no row that could match. */
   private[graft] def indexExactDropped(spark: SparkSession, hashesDir: String,
                                        batchH: DataFrame, epoch: Long): DataFrame = {
-    // bounded collect: ≤ hashBuckets values by construction
-    val hbs = batchH.select("hb").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val idx = IndexIO.read(spark, hashesDir, batchH)
-      .filter(col("epoch") < epoch &&
-        (if (hbs.isEmpty) lit(false) else col("hb").isin(hbs: _*)))
+    val idx = IndexIO.readBefore(spark, hashesDir, batchH, epoch, "hb",
+      batchH.select("hb"))
     idx.select(col("h"))
       .join(batchH.select(col("doc_id").as("id_b"), col("h"))
         .hint("shuffle_hash"), Seq("h"))
@@ -152,8 +151,8 @@ object CleanCorpusStream {
           .join(nearDropped, col(idCol) === col("dropped_id"), "left_anti"),
           None, outDir),
         () => e.write(bh
-          .join(exactDropped, col("doc_id") === col("dropped_id"), "left_anti")
-          .repartition(col("hb")), Some("hb"), hashesDir)) ++ nearWrites: _*)
+          .join(exactDropped, col("doc_id") === col("dropped_id"), "left_anti"),
+          Some("hb"), hashesDir)) ++ nearWrites: _*)
       e.mark("writes(par)")
     }
   }

@@ -36,8 +36,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * the former per-batch `limit(1).count()`), and past
  * `evalBroadcastCap` rows the join falls back to a shuffle-hash join
  * (eval still the build side) instead of forcing a broadcast the
- * driver can't hold. The (epoch, eb) partitioning exists to bound
- * per-epoch file counts and to reuse
+ * driver can't hold. The (epoch, eb) partitioning (flat, one file per
+ * epoch, while an epoch is under one input split — [[IndexIO]]
+ * layouts) exists to bound per-epoch file counts and to reuse
  * [[IndexIO.compact]]/[[NearDupStream.rebucket]]
  * verbatim — not for read pruning, which a broadcast-small side does
  * not need. The index stores DISTINCT shingle hashes only (8 bytes
@@ -329,8 +330,7 @@ object DecontamStream {
           .join(dropped, col(idCol) === col("dropped_id"), "left_anti"),
           None, outDir)) ++
           (if (newCount > 0)
-            Seq(() => e.write(newEval.repartition(col("eb")), Some("eb"),
-              ngramsDir))
+            Seq(() => e.write(newEval, Some("eb"), ngramsDir))
           else Seq.empty)): _*)
     }
   }

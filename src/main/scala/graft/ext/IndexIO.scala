@@ -17,13 +17,29 @@ import org.apache.spark.sql.types.{DataType, StructType}
  *  - `epoch=<id>/...`            — written directly by batch `<id>`
  *    (plain overwrite; epoch is constant within a batch, so a replayed
  *    batch rewrites exactly its own directory);
- *  - `_fold-<upTo>-<gen>/epoch=<upTo>/<bucket>=<v>/...` — IMMUTABLE
- *    consolidated data, underscore-hidden from Spark discovery;
+ *  - `_fold-<upTo>-<gen>/epoch=<upTo>/...` — IMMUTABLE consolidated
+ *    data, underscore-hidden from Spark discovery;
  *  - `_live-<upTo>-<gen>`        — the commit record: a pointer file
  *    published with [[PathIO.atomicCreate]] naming the fold dir it
  *    activates. The HIGHEST (upTo, gen) pointer defines the committed
  *    view; everything it subsumes (plain epoch dirs ≤ upTo, earlier
  *    pointers and their fold dirs) is garbage the janitor deletes.
+ *
+ * Two root layouts ([[writeRoot]]), told apart per file by the `k=v`
+ * segments below `epoch=<id>`:
+ *  - BUCKETED: `<bucket>=<v>/part-*`, one file per bucket, so a batch
+ *    reads only its own buckets (the bucket is a partition column);
+ *  - FLAT: `part-*` directly under `epoch=<id>`, ONE file with the
+ *    bucket kept as a data column — written while the epoch's batch
+ *    plus the committed index (or a fold's sources) is under one input
+ *    split ([[BatchTune.underOneSplit]]), where a batch hits nearly
+ *    every bucket anyway and each extra file costs a reader its own
+ *    open, conf copy and footer. Small runs stay unpartitioned and a
+ *    fold partitions them once they are large — the LSM shape.
+ * A level may mix flat roots with bucketed roots of ONE bucket column.
+ * Every bucket column is derived from the key its consumer joins on,
+ * so the bucket prune only ever drops rows that cannot match: reading
+ * a flat root whole yields the same verdicts.
  *
  * Why pointers: the previous protocol finished a fold with ONE
  * directory rename (`_compact_tmp-N` → `epoch=N`) — atomic on
@@ -46,8 +62,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
  *    folded view ([[entries]] excludes subsumed dirs), resume finishes
  *    the deletes.
  *
- * Scale notes: a fold writes its consolidated copy beside its sources,
- * so while it runs a level holds its folded entries twice. The indexed
+ * Scale notes: flat roots are written only while batch plus committed
+ * index (a fold: its sources) is under one split, so a read scans at
+ * most about one split per level unpruned; an index past one split —
+ * any 100 TB deployment — is bucketed in every epoch and fold, and
+ * planned exactly as without flat roots. A fold writes its
+ * consolidated copy beside its sources, so while it runs a level holds
+ * its folded entries twice. The indexed
  * streams fold with the deferred GC ([[compact]] with `gcNow = false`),
  * so the sources go only at the NEXT batch's [[resume]]: the level's
  * on-disk footprint stays about 2× its committed view from the fold's
@@ -84,6 +105,13 @@ private[graft] object IndexIO {
     }
   }
 
+  /** The sibling a pointer publish writes first
+    * (`_live-<upTo>-<gen>.tmp.<uuid>`, [[PathIO.atomicCreate]]): not a
+    * commit. A body read listing the level while its fold publishes sees
+    * one; a crash mid-publish leaves one for [[resume]] to sweep. */
+  private def isPointerTmp(name: String): Boolean =
+    name.startsWith(PtrPrefix) && name.contains(PathIO.AtomicCreateTmpInfix)
+
   /** Committed view of one level: the live pointer (highest (upTo,
     * gen)), and the plain epoch dirs NOT subsumed by it. Subsumed
     * plain dirs (epoch ≤ live.upTo) may still exist in the
@@ -99,7 +127,8 @@ private[graft] object IndexIO {
       .foreach(n => sys.error(
         s"legacy rename-swap tmp '$n' in $dir — pre-pointer-protocol " +
           "index; finish or discard it with the engine version that wrote it"))
-    val ptrs = names.map(_.getName).filter(_.startsWith(PtrPrefix)).map(parsePointer)
+    val ptrs = names.map(_.getName)
+      .filter(n => n.startsWith(PtrPrefix) && !isPointerTmp(n)).map(parsePointer)
     val live = if (ptrs.isEmpty) None
       else Some(ptrs.maxBy(p => (p.upTo, p.gen)))
     val floor = live.map(_.upTo).getOrElse(Long.MinValue)
@@ -138,11 +167,23 @@ private[graft] object IndexIO {
     plain.map { case (e, p) => Root(dir.toString, p, e) } ++ foldRoot
   }
 
-  /** Read the committed view of one level (partition columns `epoch` +
-    * the bucket column, nullable `LongType`, so `epoch <`/`bucket isin`
-    * filters stay PartitionFilters on every branch); empty-with-schema
-    * when the level doesn't exist yet or no committed root holds a data
-    * file. `like` supplies the data schema.
+  /** One planned relation of a committed view: the files of one
+    * (basePath, layout) group, `layout` being the partition columns
+    * below `epoch=` — the bucket column, or none for flat roots. */
+  private final case class Group(layout: Seq[String], bytes: Long, df: DataFrame)
+
+  private def union(dfs: Seq[DataFrame]): Option[DataFrame] =
+    dfs.reduceOption(_.unionByName(_))
+
+  private def empty(like: DataFrame): DataFrame =
+    like.withColumn("epoch", lit(0L)).limit(0)
+
+  /** Read the committed view of one level (partition column `epoch`,
+    * plus the bucket column on bucketed roots — nullable `LongType`, so
+    * `epoch <`/`bucket isin` filters stay PartitionFilters); empty-with-
+    * schema when the level doesn't exist yet or no committed root holds
+    * a data file. `like` supplies the data schema, bucket column
+    * included (flat roots store it as data).
     *
     * Planning cost: no Spark job and no LIST beyond each root's file
     * set ([[plan]]) — a root carrying a [[graft.log.DirectCommitProtocol]]
@@ -152,43 +193,73 @@ private[graft] object IndexIO {
     * × buckets) LISTs, a parallel-listing job per 64-bucket root) and
     * infer the schema in one more job per basePath group, every batch. */
   def read(spark: SparkSession, levelDir: String, like: DataFrame): DataFrame =
-    plan(spark, committedRoots(levelDir), _ => like.schema)
-      .getOrElse(like.withColumn("epoch", lit(0L)).limit(0))
+    union(plan(spark, committedRoots(levelDir), _ => like.schema).map(_.df))
+      .getOrElse(empty(like))
+
+  /** The committed entries of one level that batch `epoch` joins
+    * against: `epoch < epoch` on every root (a replayed batch must not
+    * see its own half-written entries) and, on bucketed roots only,
+    * `bucketCol isin` the distinct values of the one-column frame
+    * `buckets` — both PartitionFilters. A flat root is read whole: a
+    * flat root exists only while the level is under one split, and a
+    * bucket filter there could only become a per-epoch row predicate.
+    * The bucket list (at most the level's fanout) is collected only
+    * when the view has a bucketed root; an empty list reads nothing
+    * from bucketed roots. */
+  def readBefore(spark: SparkSession, levelDir: String, like: DataFrame,
+                 epoch: Long, bucketCol: String, buckets: DataFrame): DataFrame = {
+    lazy val keep = buckets.distinct().collect().map(_.getLong(0)).toSeq
+    union(plan(spark, committedRoots(levelDir), _ => like.schema).map { g =>
+      val before = g.df.filter(col("epoch") < epoch)
+      if (g.layout.isEmpty) before
+      else {
+        require(g.layout == Seq(bucketCol),
+          s"$levelDir is bucketed by ${g.layout.mkString("/")}, not $bucketCol")
+        before.filter(if (keep.isEmpty) lit(false) else col(bucketCol).isin(keep: _*))
+      }
+    }).getOrElse(empty(like))
+  }
 
   /** [[read]] of a level that must already have committed entries —
     * the ops/verification form. No `like` schema is available here, so
-    * the data schema comes from one footer ([[footerSchema]]); a level
-    * whose roots hold no data file reads as an empty `epoch` column. */
+    * the data schema comes from one footer per layout ([[footerSchema]]);
+    * a level whose roots hold no data file reads as an empty `epoch`
+    * column. */
   private[graft] def readLevel(spark: SparkSession, levelDir: String): DataFrame = {
     val roots = committedRoots(levelDir)
     require(roots.nonEmpty, s"no committed index entries under $levelDir")
-    plan(spark, roots, footerSchema)
+    union(plan(spark, roots, footerSchema).map(_.df))
       .getOrElse(spark.emptyDataFrame.withColumn("epoch", lit(0L)))
   }
 
   /** Plan `roots` from their file sets with no Spark job: one
-    * [[CatalogFileIndex]] relation per basePath group (the plain roots;
-    * the live fold's subtree), each with its group's roots as
-    * `rootPaths`, unioned by name. `dataSchema` gives the data schema
-    * for the planned files (partition columns are dropped from it).
-    * None when no root holds a data file — a zero-row epoch write
-    * leaves only `epoch=<id>/_SUCCESS`. */
+    * [[CatalogFileIndex]] relation per (basePath, layout) group (plain
+    * roots; the live fold's subtree; flat and bucketed apart), each
+    * with its group's roots as `rootPaths`. `dataSchema` gives the data
+    * schema of a layout's files (its partition columns are dropped from
+    * it). Empty when no root holds a data file — a zero-row bucketed
+    * write leaves only `epoch=<id>/_SUCCESS`. A layout mix other than
+    * flat beside one bucket column is refused. */
   private def plan(spark: SparkSession, roots: Seq[Root],
                    dataSchema: Seq[CatalogFileIndex.Entry] => StructType)
-      : Option[DataFrame] = {
-    val groups = roots.groupBy(_.base).toSeq.sortBy(_._1)
-      .map { case (_, rs) => (rs.map(_.dir), rs.flatMap(rootFiles)) }
-      .filter(_._2.nonEmpty)
-    if (groups.isEmpty) return None
-    val layouts = groups.flatMap(_._2.map(_._1)).distinct
-    require(layouts.size == 1, s"index roots ${roots.map(_.dir).mkString(", ")} " +
-      s"mix partition layouts ${layouts.map(_.mkString("/")).mkString(", ")}")
-    val partCols = "epoch" +: layouts.head
-    val data = StructType(dataSchema(groups.flatMap(_._2.map(_._2)))
-      .filterNot(f => partCols.contains(f.name)))
-    Some(groups.map { case (dirs, fs) =>
-      CatalogFileIndex.relation(spark, dirs, partCols, fs.map(_._2), data)
-    }.reduce(_.unionByName(_)))
+      : Seq[Group] = {
+    // (root, layout, file) for every data file of every root
+    val files = roots.flatMap(r => rootFiles(r).map { case (layout, e) => (r, layout, e) })
+    val bucketLayouts = files.map(_._2).filter(_.nonEmpty).distinct
+    require(bucketLayouts.size <= 1, s"index roots ${roots.map(_.dir).mkString(", ")} " +
+      s"mix partition layouts ${bucketLayouts.map(_.mkString("/")).mkString(", ")}")
+    val schemas = files.groupBy(_._2).map { case (layout, fs) =>
+      val partCols = "epoch" +: layout
+      layout -> StructType(dataSchema(fs.map(_._3))
+        .filterNot(f => partCols.contains(f.name)))
+    }
+    files.groupBy(f => (f._1.base, f._2)).toSeq
+      .sortBy { case ((base, layout), _) => (base, layout.isEmpty) }
+      .map { case ((_, layout), fs) =>
+        val entries = fs.map(_._3)
+        Group(layout, entries.map(_.size).sum, CatalogFileIndex.relation(spark,
+          fs.map(_._1.dir).distinct, "epoch" +: layout, entries, schemas(layout)))
+      }
   }
 
   /** One root's data files with their partition layout (the `k=v`
@@ -247,6 +318,16 @@ private[graft] object IndexIO {
   private[graft] def committedBytes(levelDir: String): Long =
     committedRoots(levelDir).flatMap(rootFiles).map(_._2.size).sum
 
+  /** Overwrite one index root `dir` with `df`: FLAT — one file, the
+    * bucket column kept as data — or BUCKETED — partitioned by
+    * `bucketCol` after a repartition on it, so each bucket lands in one
+    * file (the per-file fixed cost every later pruned read pays). */
+  private[ext] def writeRoot(df: DataFrame, bucketCol: String, flat: Boolean,
+                             dir: String): Unit =
+    if (flat) df.coalesce(1).write.mode("overwrite").parquet(dir)
+    else df.repartition(col(bucketCol))
+      .write.mode("overwrite").partitionBy(bucketCol).parquet(dir)
+
   /** Heal + garbage-collect one level (see class doc crash windows).
     * Idempotent; every stream batch runs it before reading. */
   def resume(levelDir: String): Unit = {
@@ -256,8 +337,10 @@ private[graft] object IndexIO {
     val names = PathIO.listDir(dir)
     live match {
       case None =>
-        // no commit: fold dirs are mid-write garbage; epochs intact
-        names.filter(_.getName.startsWith(FoldPrefix))
+        // no commit: fold dirs are mid-write garbage, a pointer tmp the
+        // leftover of a crashed publish (no fold is in flight while a
+        // batch resumes its levels); epochs intact
+        names.filter(p => p.getName.startsWith(FoldPrefix) || isPointerTmp(p.getName))
           .foreach(p => PathIO.deleteTree(p): Unit)
       case Some(p) =>
         require(PathIO.exists(PathIO.path(
@@ -267,6 +350,7 @@ private[graft] object IndexIO {
           val n = entry.getName
           val subsumedEpoch = n.startsWith("epoch=") &&
             n.stripPrefix("epoch=").toLong <= p.upTo
+          // older pointers, and pointer tmps of crashed publishes
           val stalePtr = n.startsWith(PtrPrefix) && n != p.ptrName
           val staleFold = n.startsWith(FoldPrefix) && n != p.foldName
           if (subsumedEpoch || staleFold) PathIO.deleteTree(entry): Unit
@@ -277,9 +361,9 @@ private[graft] object IndexIO {
 
   /** Fold every committed entry with epoch ≤ `upToEpoch` into one
     * consolidated fold dir, committed by pointer. No-op below two
-    * sources. `bucketCol` is the level's bucket partition column —
-    * repartitioned on before the write so each bucket lands in one
-    * file (the per-file fixed cost every later pruned read pays).
+    * sources. The fold is written flat while its sources are under one
+    * input split (`spark.sql.files.maxPartitionBytes`), else bucketed
+    * by `bucketCol`, the level's bucket column ([[writeRoot]]).
     *
     * `gcNow = false` defers the post-commit cleanup (deleting the
     * subsumed plain epoch dirs) to the NEXT [[resume]] call: the fold
@@ -294,7 +378,8 @@ private[graft] object IndexIO {
 
   /** Bucket-fanout migration: fold EVERY committed entry, recomputing
     * the bucket column as `pmod(srcCol, newBuckets)` — proceeds even
-    * from a single source (the point is the new fanout, not the fold).
+    * from a single source (the point is the new fanout, not the fold)
+    * and always writes bucketed, whatever the size.
     * OFFLINE op: run with the stream stopped (single-writer, like the
     * resize it implements). */
   def rebucket(spark: SparkSession, levelDir: String, bucketCol: String,
@@ -319,16 +404,17 @@ private[graft] object IndexIO {
     val foldBase = PathIO.child(dir, next.foldName)
     PathIO.deleteTree(foldBase): Unit // unreachable name unless resume raced
     val foldData = PathIO.child(foldBase, s"epoch=$foldPoint")
-    plan(spark, sources, footerSchema) match {
+    val groups = plan(spark, sources, footerSchema)
+    union(groups.map(_.df)) match {
       case Some(sourceDf) =>
         // the fold dir IS the new epoch
         val input = sourceDf.drop("epoch")
-        val rebucketed = rebucketTo.fold(input) { case (srcCol, n) =>
-          input.drop(bucketCol)
-            .withColumn(bucketCol, pmod(col(srcCol), lit(n.toLong)))
+        val (folded, flat) = rebucketTo match {
+          case Some((srcCol, n)) => (input.drop(bucketCol)
+            .withColumn(bucketCol, pmod(col(srcCol), lit(n.toLong))), false)
+          case None => (input, groups.map(_.bytes).sum < BatchTune.splitBytes(spark))
         }
-        rebucketed.repartition(col(bucketCol))
-          .write.partitionBy(bucketCol).parquet(foldData.toString)
+        writeRoot(folded, bucketCol, flat, foldData.toString)
       case None =>
         // every source wrote zero rows: commit an empty fold, its
         // `_SUCCESS` a manifest recording no files

@@ -13,8 +13,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * Per batch, in order:
  *  1. [[BatchTune.adapt]] with the summed committed bytes of the levels;
  *     and, when the batch plus those bytes is under one input split
- *     ([[BatchTune.underOneSplit]]), whole-stage codegen off on the
- *     batch's session until the step returns (see below);
+ *     ([[BatchTune.underOneSplit]]) — a SMALL epoch — whole-stage
+ *     codegen off on the batch's session until the step returns (see
+ *     below), and flat index writes ([[Epoch.write]]);
  *  2. [[IndexIO.resume]] on each level — finish (or discard) any
  *     crash-interrupted fold BEFORE the body reads the index;
  *  3. on schedule (`epoch > 0 && epoch % compactEvery == 0`) start one
@@ -39,7 +40,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * overwrite (the replayed epoch rewrites only its own directory) but
  * without the dynamic commit protocol, whose staging + per-partition
  * moves measured 5-6 s per batch on the bands index. `key=value`
- * naming keeps readers' partition discovery and the epoch prune.
+ * naming keeps readers' partition discovery and the epoch prune. An
+ * index level of a small epoch is written as ONE flat file, the bucket
+ * kept as a data column; otherwise one file per bucket ([[IndexIO]]
+ * layouts). A 167-doc `corpus_stream` epoch wrote 128 files of ~40
+ * rows each (3 when flat), and a profile put ~46% of its executor CPU
+ * on per-file work: opens for read and write, commits.
  *
  * Codegen: one fold cycle of an indexed stream touches more distinct
  * generated classes (~120 for [[CleanCorpusStream]]) than Spark's
@@ -51,19 +57,21 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * ICDE 2018), so such an epoch, and the folds it starts on the same
  * session, plan without whole-stage codegen. Fewer classes are left
  * (52 per fold cycle for [[NearDupStream]], 82 for
- * [[CleanCorpusStream]]), so a steady-state epoch compiles none or a
- * few: the cache's 4 segments of 25 can still overflow unevenly
- * (`EpochCodegenSpec`). The rule only ever turns codegen off: a batch
- * of one split or more keeps the session's value, and the value the
- * session had is put back on every exit, after the fold is awaited
- * (fold futures plan asynchronously).
+ * [[CleanCorpusStream]] with one-file-per-bucket writes; the flat
+ * writes of small epochs need no repartition hash projection), so a
+ * steady-state epoch compiles none or a few: the cache's 4 segments
+ * of 25 can still overflow unevenly (`EpochCodegenSpec`). The rule
+ * only ever turns codegen off: a batch of one split or more keeps the
+ * session's value, and the value the session had is put back on every
+ * exit, after the fold is awaited (fold futures plan asynchronously).
  */
 private[graft] object IndexedEpoch {
 
   /** One batch's handle: its session and epoch id, the debug phase
     * timer, the pin list released at epoch end, and the epoch write. */
   final class Epoch private[IndexedEpoch] (val spark: SparkSession,
-                                           val id: Long, tag: String) {
+                                           val id: Long, tag: String,
+                                           small: Boolean) {
     private val dbg = sys.env.contains("SPARK_GRAFT_ND_DEBUG")
     private var tPrev = System.nanoTime()
     private val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -82,10 +90,13 @@ private[graft] object IndexedEpoch {
       p
     }
 
-    /** Overwrite `path/epoch=<id>`, partitioned by `bucket` if given. */
+    /** Overwrite `path/epoch=<id>` with `df`. An index level names its
+      * `bucket` column: written flat in a small epoch, else partitioned
+      * by the bucket ([[IndexIO.writeRoot]]). */
     def write(df: DataFrame, bucket: Option[String], path: String): Unit = {
-      val w = df.write.mode("overwrite")
-      bucket.fold(w)(b => w.partitionBy(b)).parquet(s"$path/epoch=$id")
+      val dir = s"$path/epoch=$id"
+      bucket.fold(df.write.mode("overwrite").parquet(dir))(b =>
+        IndexIO.writeRoot(df, b, flat = small, dir))
     }
 
     private[IndexedEpoch] def release(): Unit =
@@ -115,10 +126,10 @@ private[graft] object IndexedEpoch {
     val indexBytes = levels.map(l => IndexIO.committedBytes(l._1)).sum
     BatchTune.adapt(batch, indexBytes)
     val wholeStage = spark.conf.get(WholeStage)
-    if (BatchTune.underOneSplit(batch, indexBytes))
-      spark.conf.set(WholeStage, "false")
+    val small = BatchTune.underOneSplit(batch, indexBytes)
+    if (small) spark.conf.set(WholeStage, "false")
     try {
-      val e = new Epoch(spark, epochId, tag)
+      val e = new Epoch(spark, epochId, tag, small)
       levels.foreach(l => IndexIO.resume(l._1))
       val pendingFold = compactEvery.collect {
         case n if epochId > 0 && epochId % n == 0 =>

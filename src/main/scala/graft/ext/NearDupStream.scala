@@ -13,15 +13,23 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * forever; each new slice must be deduplicated against EVERYTHING seen
  * before without rescanning it. This operator does that with a
  * two-level on-disk index, both levels partition-PRUNED to the
- * batch's footprint:
+ * batch's footprint once the index outgrows one input split:
  *
- *  - `<index>/bands`    — (doc_id, band_hash), partitioned by
- *    (epoch, bp = band_hash mod bandBuckets). A batch reads ONLY the
+ *  - `<index>/bands`    — (doc_id, band_hash, bp = band_hash mod
+ *    bandBuckets), partitioned by (epoch, bp). A batch reads ONLY the
  *    bp partitions its own band hashes fall in: candidate lookup cost
  *    tracks the BATCH size, never the corpus.
- *  - `<index>/shingles` — (doc_id, sh = distinct shingle-hash set),
- *    partitioned by (epoch, sb = doc_id mod idBuckets). Exact
+ *  - `<index>/shingles` — (doc_id, sh = distinct shingle-hash set,
+ *    sb = doc_id mod idBuckets), partitioned by (epoch, sb). Exact
  *    verification fetches only the candidate ids' buckets.
+ *
+ * While batch plus index is under one split, an epoch writes each
+ * level as one flat file per epoch instead (bp/sb kept as data
+ * columns) and the read takes those roots whole: a small batch hits
+ * nearly every bucket, so the prune saved nothing and the per-bucket
+ * files cost every write and read ([[IndexIO]] layouts). Both bucket
+ * columns derive from the join keys (band_hash; the verified doc id),
+ * so pruned or whole, the verdicts are the same.
  *
  * Semantics ("all-seen", reference-free): a document is dropped iff
  * some document with EARLIER ARRIVAL (an earlier epoch, or a smaller
@@ -56,19 +64,22 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * candidate id buckets; exact verify ships each candidate's shingle
  * set once. The two `collect()`s are the distinct partition-bucket
  * lists — bounded by [[BandBuckets]] and [[IdBuckets]] regardless of
- * data volume. Index reads list only pruned partition directories, so
- * a year-old petabyte index costs a batch only its own buckets.
+ * data volume, and run only when the level has a bucketed root. Index
+ * reads plan only pruned partition directories, so a year-old
+ * petabyte index costs a batch only its own buckets.
  */
 object NearDupStream {
   /** Default band-hash partition fanout of the bands index. SIZING:
-    * per-epoch index-write cost is ~one parquet file per bucket
+    * a bucketed epoch write costs ~one parquet file per bucket
     * (measured ~15 ms/file — 256 buckets cost ~4 s/epoch, 64 ~1 s),
     * while read pruning only bites when a batch's 16·|batch| band
     * hashes hit a FRACTION of the buckets — buckets ≈ 16·|batch|/f to
-    * read fraction f of the index. Small local batches saturate any
-    * bucket count (no prune either way), so the default optimizes the
-    * write; a 100 TB deployment with million-doc batches raises it
-    * (the layout choice must be stable for an index's lifetime). */
+    * read fraction f of the index. Small batches saturate any bucket
+    * count, which is why an epoch under one input split writes its
+    * levels flat and pays no per-bucket file at all; the fanout sizes
+    * the bucketed epochs and folds past that point, where a 100 TB
+    * deployment with million-doc batches raises it (the layout choice
+    * must be stable for an index's lifetime — [[rebucket]] changes it). */
   val BandBuckets = 64
   /** Default doc-id partition fanout of the shingle store (same
     * file-per-bucket write/prune trade as [[BandBuckets]]). */
@@ -109,18 +120,14 @@ object NearDupStream {
 
   /** Candidate (id_a = indexed earlier doc, id_b = batch doc) pairs for
     * one batch against the persisted bands index: the read is pruned to
-    * `epoch < epoch` AND the batch's own bp buckets (both partition
-    * columns — exposed as a method so the spec can gate the
-    * PartitionFilters). */
+    * `epoch < epoch` AND, on bucketed roots, the batch's own bp buckets
+    * ([[IndexIO.readBefore]] — exposed as a method so the spec can gate
+    * the PartitionFilters). */
   private[graft] def indexCandidates(spark: SparkSession, bandsDir: String,
                                      batchBands: DataFrame,
                                      epoch: Long): DataFrame = {
-    // bounded collect: ≤ BandBuckets values by construction
-    val bps = batchBands.select("bp").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val idx = IndexIO.read(spark, bandsDir, batchBands)
-      .filter(col("epoch") < epoch &&
-        (if (bps.isEmpty) lit(false) else col("bp").isin(bps: _*)))
+    val idx = IndexIO.readBefore(spark, bandsDir, batchBands, epoch, "bp",
+      batchBands.select("bp"))
     // SHUFFLE_HASH: per-bucket pair work is quadratic in matches —
     // never broadcast the banded side (MinHash.lshCandidates rationale)
     idx.select(col("doc_id").as("id_a"), col("band_hash"))
@@ -182,13 +189,10 @@ object NearDupStream {
     val candIdx = e.pin(indexCandidates(e.spark, bandsDir, bb, e.id))
     e.mark("bands+cands")
     // fetch earlier docs' shingles — pruned to candidate id buckets
-    val sbs = candIdx.select(pmod(col("id_a"), lit(idBuckets.toLong)))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    e.mark("sbs-collect")
-    val idxSh = IndexIO.read(e.spark, shDir, sh)
-      .filter(col("epoch") < e.id &&
-        (if (sbs.isEmpty) lit(false) else col("sb").isin(sbs: _*)))
+    val idxSh = IndexIO.readBefore(e.spark, shDir, sh, e.id, "sb",
+      candIdx.select(pmod(col("id_a"), lit(idBuckets.toLong))))
       .select(col("doc_id").as("id"), col("sh"))
+    e.mark("sbs-collect")
     val shBatch = sh.select(col("doc_id").as("id"), col("sh"))
     // 2. candidates within the batch (arrival tie-break: id order)
     val a = bb.toDF("id_a", "band_hash", "bp")
@@ -207,12 +211,9 @@ object NearDupStream {
         idxSh.unionByName(shBatch), threshold)
       .select(col("id_b").as("dropped_id")).distinct()
     e.mark("plan-dropped")
-    // repartition on the bucket key BEFORE partitionBy (the delayed_due
-    // one-file-per-bucket idiom) — without it every task writes a sliver
-    // into every bucket dir, whose footer reads every LATER batch then pays
     (dropped, Seq(
-      () => e.write(bb.repartition(col("bp")), Some("bp"), bandsDir),
-      () => e.write(sh.repartition(col("sb")), Some("sb"), shDir)))
+      () => e.write(bb, Some("bp"), bandsDir),
+      () => e.write(sh, Some("sb"), shDir)))
   }
 
   /**

@@ -20,7 +20,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * deterministic quantizer shared with [[VectorOps.clusterScored]], no
  * stored model, replayable in the DuckDB oracle). A batch therefore
  * reads ONLY the cb partitions its own clusters fall in: candidate
- * lookup cost tracks the BATCH, never the corpus.
+ * lookup cost tracks the BATCH, never the corpus. While batch plus
+ * index is under one input split, epochs and folds write the level as
+ * one flat file each (cb kept as data, [[IndexIO]] layouts), read
+ * whole: the cb prune drops only other clusters, never a match.
  *
  * Semantics ("all-seen", arrival-ordered — the same SQL-expressible
  * rule as [[NearDupStream]]): a vector is dropped iff some vector with
@@ -78,18 +81,14 @@ object SemanticDedupStream {
 
   /** Earlier-arrival (id_a = indexed vec, id_b = batch vec) DROP
     * verdicts for one batch against the persisted index: the read is
-    * pruned to `epoch < epoch` AND the batch's own cb buckets (both
-    * partition columns — exposed so the spec can gate the
-    * PartitionFilters), then same-cluster exact cosine ≥ threshold. */
+    * pruned to `epoch < epoch` AND, on bucketed roots, the batch's own
+    * cb buckets ([[IndexIO.readBefore]] — exposed so the spec can gate
+    * the PartitionFilters), then same-cluster exact cosine ≥ threshold. */
   private[graft] def indexDropped(spark: SparkSession, vecsDir: String,
                                   batchQ: DataFrame, epoch: Long,
                                   threshold: Double): DataFrame = {
-    // bounded collect: ≤ ClusterBuckets values by construction
-    val cbs = batchQ.select("cb").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val idx = IndexIO.read(spark, vecsDir, batchQ)
-      .filter(col("epoch") < epoch &&
-        (if (cbs.isEmpty) lit(false) else col("cb").isin(cbs: _*)))
+    val idx = IndexIO.readBefore(spark, vecsDir, batchQ, epoch, "cb",
+      batchQ.select("cb"))
     // SHUFFLE_HASH keyed on cluster: per-cluster pair work is quadratic
     // in members — invisible to byte-based planning (semanticDedup
     // rationale); never broadcast the clustered side
@@ -139,14 +138,12 @@ object SemanticDedupStream {
         .filter(round(VectorOps.cosine(col("va"), col("vb")), 6) >= threshold)
         .select(col("id_b").as("dropped_id")).distinct()
       val dropped = idxDropped.unionByName(selfDropped).distinct()
-      // index append: ALL batch vecs, kept or dropped (all-seen);
-      // repartition on cb BEFORE partitionBy: ≤ one file per bucket per
-      // epoch (the NearDupStream write idiom)
+      // index append: ALL batch vecs, kept or dropped (all-seen)
       IndexedEpoch.parallelWrites(e.spark,
         () => e.write(cached
           .join(dropped, col(idCol) === col("dropped_id"), "left_anti"),
           None, outDir),
-        () => e.write(q.repartition(col("cb")), Some("cb"), vecsDir))
+        () => e.write(q, Some("cb"), vecsDir))
       e.mark("writes(par)")
     }
   }

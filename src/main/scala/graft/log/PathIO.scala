@@ -374,12 +374,21 @@ object PathIO {
     true
   }
 
+  /** Infix of the sibling an in-flight [[atomicCreate]] writes before
+    * it publishes (`<target name>.tmp.<uuid>`, local and rename
+    * schemes). A directory protocol that lists its publish targets must
+    * skip such names: one exists for as long as a publish is in flight,
+    * and stays behind when the publisher crashes. */
+  private[graft] val AtomicCreateTmpInfix = ".tmp."
+
+  private def atomicCreateTmpName(target: String): String =
+    s"$target$AtomicCreateTmpInfix${java.util.UUID.randomUUID}"
+
   /** Hard-link first-writer-wins (local scheme). */
   private[graft] def nioAtomicCreate(target: java.nio.file.Path,
                                      content: Array[Byte]): Boolean = {
     import java.nio.file.{Files, StandardCopyOption}
-    val tmp = target.resolveSibling(
-      s"${target.getFileName}.tmp.${java.util.UUID.randomUUID}")
+    val tmp = target.resolveSibling(atomicCreateTmpName(target.getFileName.toString))
     Files.createDirectories(target.getParent)
     Files.write(tmp, content)
     try {
@@ -404,8 +413,7 @@ object PathIO {
     * HDFS where rename fails-if-exists, verify-after elsewhere). */
   private[graft] def renameAtomicCreate(f: FileSystem, target: Path,
                                         content: Array[Byte]): Boolean = {
-    val tmp = new Path(target.getParent,
-      s"${target.getName}.tmp.${java.util.UUID.randomUUID}")
+    val tmp = new Path(target.getParent, atomicCreateTmpName(target.getName))
     val out = f.create(tmp, false)
     try out.write(content) finally out.close()
     try {

@@ -1,6 +1,7 @@
 package graft
 
-import graft.ext.{CleanCorpusStream, NearDupStream, TextOps}
+import graft.IndexSpecSupport.{bucketed, indexScans, isBucketed, jobsOf, prunes}
+import graft.ext.{CleanCorpusStream, IndexIO, TextOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
@@ -74,6 +75,9 @@ class CleanCorpusStreamSpec extends SparkSpec {
   private def keptIds(out: java.nio.file.Path): Set[Long] =
     spark.read.parquet(out.toString).select("doc_id").as[Long].collect().toSet
 
+  private def levelIds(idx: java.nio.file.Path, level: String): Seq[Long] =
+    IndexIO.readLevel(spark, s"$idx/$level").select("doc_id").as[Long].collect().toSeq
+
   private def dirs() =
     (java.nio.file.Files.createTempDirectory("cc-root"),
       java.nio.file.Files.createTempDirectory("cc-idx"),
@@ -108,14 +112,12 @@ class CleanCorpusStreamSpec extends SparkSpec {
     mkSlices(root); runStream(root, idx, out, ckpt)
     assert(keptIds(out) === Set(0L, 5L))
     // quality casualties never entered ANY index
-    val hashed = spark.read.parquet(s"$idx/hashes")
-      .select("doc_id").as[Long].collect().toSet
+    val hashed = levelIds(idx, "hashes").toSet
     assert(!hashed.contains(2L) && !hashed.contains(8L))
     // hashes level holds exact KEEPERS only (0, 3, 5, 6 — not copies 1/4/9)
     assert(hashed === Set(0L, 3L, 5L, 6L))
     // bands/shingles hold ALL exact survivors incl. near-dup casualties
-    val banded = spark.read.parquet(s"$idx/shingles")
-      .select("doc_id").as[Long].collect().toSet
+    val banded = levelIds(idx, "shingles").toSet
     assert(banded === Set(0L, 3L, 5L, 6L))
   }
 
@@ -192,6 +194,9 @@ class CleanCorpusStreamSpec extends SparkSpec {
         System.currentTimeMillis() < deadline) Thread.sleep(50)
     assert(epochWrites.exists(_.contains("*(")),
       s"no epoch write planned a whole-stage stage among ${epochWrites.size}")
+    // AQE stays on inside the epoch body (BatchTune's width is a ceiling)
+    assert(epochWrites.exists(_.contains("AdaptiveSparkPlan")),
+      s"no epoch write planned adaptively among ${epochWrites.size}")
   }
 
   test("crash replay: deleting the last commit and restarting changes nothing") {
@@ -202,24 +207,41 @@ class CleanCorpusStreamSpec extends SparkSpec {
     java.nio.file.Files.deleteIfExists(ckpt.resolve("commits").resolve(".2.crc"))
     runStream(root, idx, out, ckpt)
     assert(keptIds(out) === before)
-    val dupHashed = spark.read.parquet(s"$idx/hashes")
-      .groupBy("doc_id").count().filter(col("count") =!= 1).count()
-    assert(dupHashed === 0)
+    val hashed = levelIds(idx, "hashes")
+    assert(hashed.distinct.size === hashed.size)
+  }
+
+  /** The executed plan of doc 4's exact-hash read against epoch 0. */
+  private def exactReadPlan(idx: java.nio.file.Path): String = {
+    val bh = CleanCorpusStream.hashed(
+      docsDf.filter(col("doc_id") === 4L), "doc_id", "text",
+      CleanCorpusStream.HashBuckets)
+    CleanCorpusStream.indexExactDropped(spark, s"$idx/hashes", bh, 1L)
+      .queryExecution.executedPlan.toString()
   }
 
   test("plan: the exact-hash index read is partition-pruned to epoch < e and the batch's hb buckets") {
     val (root, idx, out, ckpt) = dirs()
-    mkSlices(root); runStream(root, idx, out, ckpt)
-    val bh = CleanCorpusStream.hashed(
-      docsDf.filter(col("doc_id") === 4L), "doc_id", "text",
-      CleanCorpusStream.HashBuckets)
-    val plan = CleanCorpusStream.indexExactDropped(spark, s"$idx/hashes", bh, 1L)
-      .queryExecution.executedPlan.toString()
-    assert(plan.contains("PartitionFilters: [isnotnull(epoch"),
-      s"epoch prune missing in:\n$plan")
-    assert(plan.contains("hb#") && plan.contains("(epoch"),
-      s"hb prune missing in:\n$plan")
+    val plan = bucketed(spark) {
+      mkSlices(root); runStream(root, idx, out, ckpt)
+      exactReadPlan(idx)
+    }
+    assert(isBucketed(idx.resolve("hashes/epoch=0")))
+    val scans = indexScans(plan)
+    assert(scans.nonEmpty && scans.forall(prunes(_, Some("hb"))),
+      s"(epoch, hb) prune missing in:\n$plan")
     assert(plan.contains("ShuffledHashJoin"),
       s"hash join must not broadcast the index side:\n$plan")
+  }
+
+  test("plan: a flat exact-hash index read keeps the epoch prune and runs no bucket-list job") {
+    val (root, idx, out, ckpt) = dirs()
+    mkSlices(root); runStream(root, idx, out, ckpt)
+    assert(!isBucketed(idx.resolve("hashes/epoch=0")))
+    val (plan, jobs) = jobsOf(spark)(exactReadPlan(idx))
+    assert(jobs.isEmpty, s"planning the flat read ran ${jobs.size} job(s)")
+    val scans = indexScans(plan)
+    assert(scans.nonEmpty && scans.forall(prunes(_, None)) &&
+      !scans.exists(prunes(_, Some("hb"))), s"flat read filters in:\n$plan")
   }
 }

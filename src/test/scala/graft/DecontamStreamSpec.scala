@@ -73,7 +73,7 @@ class DecontamStreamSpec extends SparkSpec {
     // eval rows never appear in the kept output
     assert(!spark.read.parquet(out.toString).columns.contains("is_eval"))
     // the index holds the eval doc's postings exactly once
-    val postings = spark.read.parquet(s"$idx/ngrams")
+    val postings = graft.ext.IndexIO.readLevel(spark, s"$idx/ngrams")
     assert(postings.count() === postings.select("shingle_h").distinct().count())
     // batches 0 and 2 had no eval rows: no empty epoch dirs poison the read
     import scala.jdk.CollectionConverters._

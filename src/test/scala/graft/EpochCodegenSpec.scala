@@ -89,20 +89,21 @@ class EpochCodegenSpec extends SparkSpec {
 
   /** Spark's codegen cache is a Guava cache of 4 segments × 25 entries,
     * the segment picked by a hash of the generated source and of the
-    * task class loader, whose identity hash changes per JVM. A fold
-    * cycle of this stream touches 82 distinct classes (76 in a plain
-    * epoch), so in about half of all JVMs one or two segments get more
-    * than 25 of them and recompile them every cycle: measured steady
-    * (fold, plain) compiles were (0, 0) in 3 runs of 8 and (10, 1),
-    * (11, 10), (14, 0), (15, 13), (23, 4) in the others. Without the
-    * codegen rule the same epochs compiled (83, 65) and (92, 56). The
-    * bound sits between the two. */
-  test("CleanCorpusStream: the last plain epoch and the last fold epoch compile fewer than 50 classes") {
+    * task class loader, whose identity hash changes per JVM. With flat
+    * index writes in small epochs (no repartition-before-write hash
+    * projections) a fold cycle of this stream fits the cache in most
+    * JVMs: measured steady (fold, plain) compiles were (0, 0) in 9 JVMs
+    * of 10 and (10, 1) in the other, where one segment still overflows.
+    * With one-file-per-bucket writes they were (0, 0) in 3 runs of 8
+    * and (10, 1), (11, 10), (14, 0), (15, 13), (23, 4) in the others,
+    * and without the codegen rule (83, 65) and (92, 56). The bound is
+    * the observed maximum. */
+  test("CleanCorpusStream: the last plain epoch and the last fold epoch compile at most 10 classes") {
     val compiles = compilesPerEpoch(Seq("doc_id", "text", "lang")) { (src, root) =>
       CleanCorpusStream.run(src, s"$root/index", s"$root/out",
         s"$root/ckpt", compactEvery = Some(2))
     }
     val (fold, plain) = steady(compiles)
-    assert(fold < 50L && plain < 50L, s"compiles per epoch: $compiles")
+    assert(fold <= 10L && plain <= 10L, s"compiles per epoch: $compiles")
   }
 }

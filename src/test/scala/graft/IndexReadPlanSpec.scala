@@ -3,12 +3,9 @@ package graft
 import graft.ext.IndexIO
 import graft.log.DirectCommitProtocol
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
 
 /**
  * How [[IndexIO]] plans a persisted-index read on a stock-committed
@@ -46,32 +43,7 @@ class IndexReadPlanSpec extends SparkSpec {
     root
   }
 
-  /** Spark jobs started while `f` ran. Listener delivery is
-    * asynchronous, so a sentinel job runs after `f` and the count waits
-    * for its start event: one listener sees events in posting order,
-    * so by then every job `f` started has been delivered. */
-  private def jobsOf[T](f: => T): (T, Seq[SparkListenerJobStart]) = {
-    val sc = spark.sparkContext
-    val sentinel = "index-read-plan-sentinel"
-    def description(e: SparkListenerJobStart): Option[String] =
-      Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-    val seen = new ConcurrentLinkedQueue[SparkListenerJobStart]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(e): Unit
-    }
-    sc.addSparkListener(listener)
-    try {
-      val result = f
-      sc.setJobDescription(sentinel)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.currentTimeMillis() + 30000
-      while (!seen.asScala.exists(description(_).contains(sentinel)) &&
-          System.currentTimeMillis() < deadline) Thread.sleep(20)
-      val jobs = seen.asScala.toSeq.takeWhile(!description(_).contains(sentinel))
-      assert(jobs.size < seen.size, "the sentinel job's start event never arrived")
-      (result, jobs)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsOf[T](f: => T) = IndexSpecSupport.jobsOf(spark)(f)
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Long)] =
     df.select(col("doc_id"), col("band_hash"), col("epoch").cast("long"), col("bp").cast("long"))

@@ -1,15 +1,17 @@
 package graft
 
-import graft.ext.NearDupStream
+import graft.IndexSpecSupport.{bucketed, indexScans, isBucketed, jobsOf, prunes}
+import graft.ext.{IndexIO, NearDupStream}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
 
 /** Contracts of the streaming near-dup filter the DuckDB oracle can't
-  * reach: crash-replay idempotence of the epoch-partitioned writes, the
-  * partition-pruned index read, the short-doc bypass, and unpersist
-  * discipline. The value-level truth (which docs drop at 0.8 under
+  * reach: crash-replay idempotence of the epoch-partitioned writes (also
+  * across an index layout flip), the partition-pruned index read on a
+  * bucketed index and the whole read of a flat one, the short-doc
+  * bypass, and unpersist discipline. The value-level truth (which docs drop at 0.8 under
   * arrival order) is the `stream_near_dup` oracle row. */
 class NearDupStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -62,6 +64,20 @@ class NearDupStreamSpec extends SparkSpec {
   private def keptIds(out: java.nio.file.Path): Set[Long] =
     spark.read.parquet(out.toString).select("doc_id").as[Long].collect().toSet
 
+  private def shingleIds(idx: java.nio.file.Path): Seq[Long] =
+    IndexIO.readLevel(spark, s"$idx/shingles").select("doc_id").as[Long].collect().toSeq
+
+  private def dirs() =
+    (java.nio.file.Files.createTempDirectory("nd-root"),
+      java.nio.file.Files.createTempDirectory("nd-idx"),
+      java.nio.file.Files.createTempDirectory("nd-out"),
+      java.nio.file.Files.createTempDirectory("nd-ckpt"))
+
+  /** A one-doc batch (doc 1) banded as the stream bands it. */
+  private def batchBands =
+    NearDupStream.bandedSigs(corpus.toDF("doc_id", "text").filter(col("doc_id") === 1L),
+      "doc_id", "text", 3, 32, 16, NearDupStream.BandBuckets)
+
   test("cross-batch + within-batch dedup; short docs bypass; first arrival wins") {
     val root = java.nio.file.Files.createTempDirectory("nd-root")
     val idx = java.nio.file.Files.createTempDirectory("nd-idx")
@@ -73,28 +89,41 @@ class NearDupStreamSpec extends SparkSpec {
     // batch 2 -> 5 dropped (within-batch, id order); 3 short -> kept
     assert(keptIds(out) === Set(0L, 2L, 3L, 4L, 6L))
     // the short doc must NOT be in the shingle index
-    val indexed = spark.read.parquet(s"$idx/shingles")
-      .select("doc_id").as[Long].collect().toSet
+    val indexed = shingleIds(idx).toSet
     assert(!indexed.contains(3L))
     assert(indexed === Set(0L, 1L, 2L, 4L, 5L, 6L))
   }
 
-  test("a first batch of only sub-shingle docs indexes nothing; the next batch still reads the index") {
-    val root = java.nio.file.Files.createTempDirectory("nd-root")
-    val idx = java.nio.file.Files.createTempDirectory("nd-idx")
-    val out = java.nio.file.Files.createTempDirectory("nd-out")
-    val ckpt = java.nio.file.Files.createTempDirectory("nd-ckpt")
+  /** The file names of each index level's `epoch=0` root after a first
+    * batch of only sub-shingle docs and a second of the whole corpus. */
+  private def subShingleFirst(bucketedIndex: Boolean): Seq[Seq[String]] = {
+    val (root, idx, out, ckpt) = dirs()
     writeSlices(root, Seq(Seq((10L, "too short"), (11L, "tiny")), corpus))
-    runStream(root, idx, out, ckpt)
-    // batch 0's index epochs committed zero rows: `_SUCCESS` only
-    Seq("bands", "shingles").foreach { level =>
-      val names = java.nio.file.Files.list(idx.resolve(level).resolve("epoch=0"))
-      try assert(names.iterator().asScala.map(_.getFileName.toString)
-        .filterNot(_.startsWith(".")).toSeq === Seq("_SUCCESS"))
-      finally names.close()
-    }
+    if (bucketedIndex) bucketed(spark)(runStream(root, idx, out, ckpt))
+    else runStream(root, idx, out, ckpt)
+    assert(isBucketed(idx.resolve("bands/epoch=1")) === bucketedIndex)
     // batch 1 = the whole corpus: 1 and 5 drop within the batch
     assert(keptIds(out) === Set(0L, 2L, 3L, 4L, 6L, 10L, 11L))
+    Seq("bands", "shingles").map { level =>
+      assert(IndexIO.readLevel(spark, s"$idx/$level")
+        .filter(col("epoch") === 0L).count() === 0L)
+      val names = java.nio.file.Files.list(idx.resolve(level).resolve("epoch=0"))
+      try names.iterator().asScala.map(_.getFileName.toString)
+        .filterNot(_.startsWith(".")).toSeq.sorted
+      finally names.close()
+    }
+  }
+
+  test("a first batch of only sub-shingle docs indexes nothing; the next batch still reads the index") {
+    // a bucketed zero-row epoch commits `_SUCCESS` only
+    assert(subShingleFirst(bucketedIndex = true).forall(_ === Seq("_SUCCESS")))
+  }
+
+  test("a zero-row flat epoch holds one schema-only file and reads as zero rows") {
+    subShingleFirst(bucketedIndex = false).foreach { names =>
+      assert(names.size === 2 && names.head === "_SUCCESS" &&
+        names(1).endsWith(".parquet"), names)
+    }
   }
 
   test("crash replay: deleting the last commit and restarting changes nothing") {
@@ -112,53 +141,93 @@ class NearDupStreamSpec extends SparkSpec {
     runStream(root, idx, out, ckpt)
     assert(keptIds(out) === before)
     // no duplicated index entries: each doc indexed exactly once
-    val counts = spark.read.parquet(s"$idx/shingles")
-      .groupBy("doc_id").count().filter(col("count") =!= 1).count()
-    assert(counts === 0)
+    val ids = shingleIds(idx)
+    assert(ids.distinct.size === ids.size)
+  }
+
+  /** Every row of both index levels, epoch and bucket included. */
+  private def indexRows(idx: java.nio.file.Path): Seq[Set[Seq[Long]]] =
+    Seq("bands" -> Seq("doc_id", "band_hash", "bp", "epoch"),
+      "shingles" -> Seq("doc_id", "sb", "epoch")).map { case (level, cols) =>
+      IndexIO.readLevel(spark, s"$idx/$level").select(cols.map(col): _*)
+        .collect().map(r => cols.indices.map(r.getLong)).toSet
+    }
+
+  test("crash replay across a layout flip: a bucketed epoch replays flat, a flat one bucketed") {
+    for (firstBucketed <- Seq(true, false)) {
+      def run(bucketedIndex: Boolean, dirs: (java.nio.file.Path, java.nio.file.Path,
+          java.nio.file.Path, java.nio.file.Path)): Unit = {
+        val (root, idx, out, ckpt) = dirs
+        if (bucketedIndex) bucketed(spark)(runStream(root, idx, out, ckpt))
+        else runStream(root, idx, out, ckpt)
+      }
+      // the no-crash run, in the first layout throughout
+      val ref = dirs()
+      mkSlices(ref._1); run(firstBucketed, ref)
+      // the same run, its last commit lost and epoch 2 replayed in the
+      // other layout over epochs 0-1 of the first
+      val crash = dirs()
+      val (root, idx, out, ckpt) = crash
+      mkSlices(root); run(firstBucketed, crash)
+      assert(isBucketed(idx.resolve("bands/epoch=2")) === firstBucketed)
+      java.nio.file.Files.deleteIfExists(ckpt.resolve("commits").resolve("2"))
+      java.nio.file.Files.deleteIfExists(ckpt.resolve("commits").resolve(".2.crc"))
+      run(!firstBucketed, crash)
+      Seq("bands", "shingles").foreach { level =>
+        assert(isBucketed(idx.resolve(s"$level/epoch=2")) === !firstBucketed)
+        assert(isBucketed(idx.resolve(s"$level/epoch=1")) === firstBucketed)
+      }
+      assert(keptIds(out) === keptIds(ref._3))
+      assert(indexRows(idx) === indexRows(ref._2))
+    }
   }
 
   test("plan: the index candidate read is partition-pruned to epoch < e and the batch's bp buckets") {
-    val root = java.nio.file.Files.createTempDirectory("nd-root")
-    val idx = java.nio.file.Files.createTempDirectory("nd-idx")
-    val out = java.nio.file.Files.createTempDirectory("nd-out")
-    val ckpt = java.nio.file.Files.createTempDirectory("nd-ckpt")
+    val (root, idx, out, ckpt) = dirs()
+    val plan = bucketed(spark) {
+      mkSlices(root); runStream(root, idx, out, ckpt)
+      NearDupStream.indexCandidates(spark, s"$idx/bands", batchBands, 1L)
+        .queryExecution.executedPlan.toString()
+    }
+    assert(isBucketed(idx.resolve("bands/epoch=0")))
+    val scans = indexScans(plan)
+    assert(scans.nonEmpty && scans.forall(prunes(_, Some("bp"))),
+      s"(epoch, bp) prune missing in:\n$plan")
+    assert(plan.contains("ShuffledHashJoin"),
+      s"band join must not broadcast:\n$plan")
+  }
+
+  test("plan: a flat index candidate read keeps the epoch prune and runs no bucket-list job") {
+    val (root, idx, out, ckpt) = dirs()
     mkSlices(root); runStream(root, idx, out, ckpt)
-    val batch = corpus.toDF("doc_id", "text").filter(col("doc_id") === 1L)
-    val bb = NearDupStream.bandedSigs(batch, "doc_id", "text", 3, 32, 16,
-      NearDupStream.BandBuckets)
-    val plan = NearDupStream.indexCandidates(spark, s"$idx/bands", bb, 1L)
-      .queryExecution.executedPlan.toString()
-    assert(plan.contains("PartitionFilters: [isnotnull(epoch"),
-      s"epoch prune missing in:\n$plan")
-    assert(plan.contains("bp#") && plan.contains("(epoch"),
-      s"bp prune missing in:\n$plan")
+    assert(!isBucketed(idx.resolve("bands/epoch=0")))
+    val (plan, jobs) = jobsOf(spark) {
+      NearDupStream.indexCandidates(spark, s"$idx/bands", batchBands, 1L)
+        .queryExecution.executedPlan.toString()
+    }
+    assert(jobs.isEmpty, s"planning the flat read ran ${jobs.size} job(s)")
+    val scans = indexScans(plan)
+    assert(scans.nonEmpty && scans.forall(prunes(_, None)) &&
+      !scans.exists(prunes(_, Some("bp"))), s"flat read filters in:\n$plan")
     assert(plan.contains("ShuffledHashJoin"),
       s"band join must not broadcast:\n$plan")
   }
 
   test("plan: with a committed fold, BOTH read branches keep the (epoch, bp) PartitionFilters") {
-    val root = java.nio.file.Files.createTempDirectory("nd-root")
-    val idx = java.nio.file.Files.createTempDirectory("nd-idx")
-    val out = java.nio.file.Files.createTempDirectory("nd-out")
-    val ckpt = java.nio.file.Files.createTempDirectory("nd-ckpt")
-    mkSlices(root); runStream(root, idx, out, ckpt)
-    // fold epochs <= 1 by pointer commit; epoch=2 stays plain — the
-    // committed view now reads TWO roots (fold subtree + plain dir)
-    graft.ext.IndexIO.compact(spark, s"$idx/bands", "bp", 1L)
-    assert(graft.ext.IndexIO.committedEpochs(s"$idx/bands") === Seq(1L, 2L))
-    val batch = corpus.toDF("doc_id", "text").filter(col("doc_id") === 1L)
-    val bb = NearDupStream.bandedSigs(batch, "doc_id", "text", 3, 32, 16,
-      NearDupStream.BandBuckets)
-    val plan = NearDupStream.indexCandidates(spark, s"$idx/bands", bb, 3L)
-      .queryExecution.executedPlan.toString()
-    val scans = plan.split('\n').filter(l =>
-      l.contains("FileScan") && (l.contains("_fold-") || l.contains("epoch=")))
-    assert(scans.length == 2, s"expected 2 index scans in:\n$plan")
-    scans.foreach { l =>
-      assert(l.contains("PartitionFilters: [isnotnull(epoch") &&
-        l.contains("(epoch") && l.contains("bp#"),
-        s"a branch lost its partition prune: $l")
+    val (root, idx, out, ckpt) = dirs()
+    val plan = bucketed(spark) {
+      mkSlices(root); runStream(root, idx, out, ckpt)
+      // fold epochs <= 1 by pointer commit; epoch=2 stays plain — the
+      // committed view now reads TWO roots (fold subtree + plain dir)
+      IndexIO.compact(spark, s"$idx/bands", "bp", 1L)
+      assert(IndexIO.committedEpochs(s"$idx/bands") === Seq(1L, 2L))
+      NearDupStream.indexCandidates(spark, s"$idx/bands", batchBands, 3L)
+        .queryExecution.executedPlan.toString()
     }
+    assert(isBucketed(idx.resolve("bands/_fold-1-0/epoch=1")))
+    val scans = indexScans(plan)
+    assert(scans.length == 2, s"expected 2 index scans in:\n$plan")
+    scans.foreach(l => assert(prunes(l, Some("bp")), s"a branch lost its partition prune: $l"))
   }
 
   test("compaction folds epoch dirs without changing results; replay after compaction safe") {

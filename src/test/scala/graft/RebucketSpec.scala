@@ -65,7 +65,7 @@ class RebucketSpec extends SparkSpec {
     val keptBefore = spark.read.parquet(out.toString)
       .select("doc_id").as[Long].collect().toSet
     assert(keptBefore === Set(0L, 1L, 2L, 3L))
-    val bandsBefore = spark.read.parquet(s"$idx/bands")
+    val bandsBefore = graft.ext.IndexIO.readLevel(spark, s"$idx/bands")
       .select("doc_id", "band_hash").collect().toSet
     // migrate both levels: bands 64->256, shingles 32->128
     NearDupStream.rebucket(spark, s"$idx/bands", "bp", "band_hash", 256)
@@ -115,7 +115,7 @@ class RebucketSpec extends SparkSpec {
       idx.toString, out.toString, ckpt.toString, threshold = 0.8,
       clusterBits = 4, clusterBuckets = 8)
     try q.processAllAvailable() finally q.stop()
-    val before = spark.read.parquet(s"$idx/vecs")
+    val before = graft.ext.IndexIO.readLevel(spark, s"$idx/vecs")
       .select("vec_id", "cluster").collect().toSet
     NearDupStream.rebucket(spark, s"$idx/vecs", "cb", "cluster", 16)
     val after = graft.ext.IndexIO.readLevel(spark, s"$idx/vecs")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.IndexSpecSupport.{bucketed, indexScans, isBucketed, jobsOf, prunes}
 import graft.ext.SemanticDedupStream
 import org.apache.spark.sql.functions._
 
@@ -72,7 +73,7 @@ class SemanticDedupStreamSpec extends SparkSpec {
     mkSlices(root); runStream(root, idx, out, ckpt)
     assert(keptIds(out) === Set(0L, 2L, 3L, 4L, 6L))
     // ALL vecs indexed, kept or dropped (the all-seen contract), once each
-    val indexed = spark.read.parquet(s"$idx/vecs")
+    val indexed = graft.ext.IndexIO.readLevel(spark, s"$idx/vecs")
       .groupBy("vec_id").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(indexed.keySet === corpus.map(_._1).toSet)
@@ -87,25 +88,43 @@ class SemanticDedupStreamSpec extends SparkSpec {
     java.nio.file.Files.deleteIfExists(ckpt.resolve("commits").resolve(".2.crc"))
     runStream(root, idx, out, ckpt)
     assert(keptIds(out) === before)
-    val dupIndexed = spark.read.parquet(s"$idx/vecs")
+    val dupIndexed = graft.ext.IndexIO.readLevel(spark, s"$idx/vecs")
       .groupBy("vec_id").count().filter(col("count") =!= 1).count()
     assert(dupIndexed === 0)
   }
 
-  test("plan: the index drop read is partition-pruned to epoch < e and the batch's cb buckets") {
-    val (root, idx, out, ckpt) = dirs()
-    mkSlices(root); runStream(root, idx, out, ckpt)
+  /** The executed plan of vec 1's index drop read against epoch 0. */
+  private def dropReadPlan(idx: java.nio.file.Path): String = {
     val batch = corpus.toDF("vec_id", "embedding").filter(col("vec_id") === 1L)
     val q = SemanticDedupStream.quantized(batch, "vec_id", "embedding", 4,
       SemanticDedupStream.ClusterBuckets)
-    val plan = SemanticDedupStream.indexDropped(spark, s"$idx/vecs", q, 1L, 0.8)
+    SemanticDedupStream.indexDropped(spark, s"$idx/vecs", q, 1L, 0.8)
       .queryExecution.executedPlan.toString()
-    assert(plan.contains("PartitionFilters: [isnotnull(epoch"),
-      s"epoch prune missing in:\n$plan")
-    assert(plan.contains("cb#") && plan.contains("(epoch"),
-      s"cb prune missing in:\n$plan")
+  }
+
+  test("plan: the index drop read is partition-pruned to epoch < e and the batch's cb buckets") {
+    val (root, idx, out, ckpt) = dirs()
+    val plan = bucketed(spark) {
+      mkSlices(root); runStream(root, idx, out, ckpt)
+      dropReadPlan(idx)
+    }
+    assert(isBucketed(idx.resolve("vecs/epoch=0")))
+    val scans = indexScans(plan)
+    assert(scans.nonEmpty && scans.forall(prunes(_, Some("cb"))),
+      s"(epoch, cb) prune missing in:\n$plan")
     assert(plan.contains("ShuffledHashJoin"),
       s"cluster join must not broadcast:\n$plan")
+  }
+
+  test("plan: a flat index drop read keeps the epoch prune and runs no bucket-list job") {
+    val (root, idx, out, ckpt) = dirs()
+    mkSlices(root); runStream(root, idx, out, ckpt)
+    assert(!isBucketed(idx.resolve("vecs/epoch=0")))
+    val (plan, jobs) = jobsOf(spark)(dropReadPlan(idx))
+    assert(jobs.isEmpty, s"planning the flat read ran ${jobs.size} job(s)")
+    val scans = indexScans(plan)
+    assert(scans.nonEmpty && scans.forall(prunes(_, None)) &&
+      !scans.exists(prunes(_, Some("cb"))), s"flat read filters in:\n$plan")
   }
 
   test("scheduled compaction folds epoch dirs; results and replay unchanged") {
